@@ -3,7 +3,8 @@ package graft
   * `SPARK_GRAFT_SF_DIR`, writes the full per-query record to
   * `BENCH_FULL_c<cpus>.json` (canonical, pointed at by the stdout
   * line's `queries_file`; the cpus suffix keeps a scaling run at a
-  * different core count from clobbering the 32-core record) and to
+  * different core count from clobbering the 32-core record; a flagged
+  * run never overwrites a zero-flag one, see [[fullTargets]]) and to
   * `BENCH_FULL.json` (last-run convenience copy), plus a durable
   * `BENCH_PARTIAL.jsonl` append log, and prints ONE bounded-size JSON
   * summary line on stdout.
@@ -193,6 +194,30 @@ object Bench {
       s""""adjusted_total":${n2(adjTotal)},"adjusted_tiers":$adjJson,""" +
       s""""flagged":$flaggedJson$flaggedMore$flagSchema$errJson,""" +
       s""""queries_file":${jstr(queriesFile)},"sf":${jstr(sf)}}"""
+  }
+
+  private def canonicalFile(fullFile: String, cpus: String): String =
+    fullFile.stripSuffix(".json") + s"_c$cpus.json"
+
+  /** Where a full-suite run writes its per-query record — PURE
+    * (BenchSpec pins each case). The head is the file that holds THIS
+    * run's map, which the stdout `queries_file` points at.
+    *   - Clean run: the canonical `<base>_c<cpus>.json` (so a scaling
+    *     run at another core count never clobbers it) and the last-run
+    *     copy `fullFile`.
+    *   - Flagged run: one more `_c<cpus>_FLAGGED.json` copy as a marker.
+    *   - Flagged run over a canonical record that holds a zero-flag
+    *     close (`existingCanonical`, the file's current content): the
+    *     canonical file is left alone, so a noisy host cannot clobber a
+    *     clean close; the run writes its `_FLAGGED` copy and the
+    *     last-run copy only. */
+  def fullTargets(fullFile: String, cpus: String, flagged: Boolean,
+      existingCanonical: Option[String]): Seq[String] = {
+    val canonical = canonicalFile(fullFile, cpus)
+    val marker = canonical.stripSuffix(".json") + "_FLAGGED.json"
+    if (!flagged) Seq(canonical, fullFile)
+    else if (existingCanonical.exists(_.contains("\"flagged\":{}"))) Seq(marker, fullFile)
+    else Seq(canonical, fullFile, marker)
   }
 
   /** Adjudicated (total, per-tier) sums: every flagged query's first-run
@@ -441,28 +466,20 @@ object Bench {
     val fullFileDefault =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
     // The per-query map goes to ONE deterministic file per (run kind,
-    // core count), EVERY full-suite run — the r18 round-over-round
-    // comparison died because the old flag-diversion logic wrote the
-    // map to a flag-dependent filename and the driver's later 8-core
-    // scaling run clobbered the 32-core record (PERF_r18 joined 0
-    // queries). Now: the cpus-suffixed file is the canonical record the
-    // stdout `queries_file` points at (a scaling run at a different
-    // core count writes a DIFFERENT file, so it can never clobber the
-    // 32-core map), the unsuffixed BENCH_FULL.json is additionally
-    // refreshed every run as the last-run convenience copy the judge
-    // has historically read from git, and a flagged run writes one
-    // extra `_FLAGGED`-suffixed copy as a marker — an ADDITION, never a
-    // diversion, so nothing about where the map lives depends on how
-    // noisy the host happened to be.
-    val fullFileCpus =
-      fullFileDefault.stripSuffix(".json") + s"_c$cpus.json"
-    val queriesFile = if (only.isEmpty) fullFileCpus
+    // core count) — the r18 round-over-round comparison died when a
+    // flag-dependent filename let the 8-core scaling run clobber the
+    // 32-core record (PERF_r18 joined 0 queries). See [[fullTargets]].
+    val targets = fullTargets(fullFileDefault, cpus, flagged.nonEmpty, {
+      val f = new java.io.File(canonicalFile(fullFileDefault, cpus))
+      if (!f.isFile) None
+      else {
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try Some(src.mkString) finally src.close()
+      }
+    })
+    val queriesFile = if (only.isEmpty) targets.head
       else sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTIAL", "BENCH_PARTIAL.jsonl")
     if (only.isEmpty) {
-      val targets = Seq(fullFileCpus, fullFileDefault) ++
-        (if (flagged.nonEmpty)
-          Seq(fullFileCpus.stripSuffix(".json") + "_FLAGGED.json")
-         else Nil)
       targets.foreach { f =>
         val fullOut = new java.io.PrintWriter(
           new java.io.FileWriter(f, false), true)

@@ -73,7 +73,7 @@ object ScaleData {
   private def fingerprint(spark: SparkSession, baseDir: String,
       k: Int): String = {
     def fp(t: String, idCol: String): String = {
-      val r = spark.read.parquet(s"$baseDir/$t.parquet")
+      val r = Tables.table(spark, baseDir, t)
         .agg(count(lit(1)), coalesce(max(col(idCol)), lit(-1L))).head()
       s"$t=${r.getLong(0)}/${r.getLong(1)}"
     }
@@ -115,8 +115,7 @@ object ScaleData {
       fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
     }
 
-    def base(t: String): DataFrame =
-      spark.read.parquet(s"$baseDir/$t.parquet")
+    def base(t: String): DataFrame = Tables.table(spark, baseDir, t)
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     def strideOf(df: DataFrame, idCol: String): Long =

@@ -1,8 +1,12 @@
 package graft.engine
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver test star schema (`TESTDATA.md`), which plays the
   * structural roles of the reference's flight star schema (see `FIXTURES.md`):
@@ -10,14 +14,78 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `nation` (role-playing via customer/supplier) = dim_airports,
   * derived calendar over `o_orderdate` = dim_calendar.
   *
-  * All loads are plain parquet scans: Catalyst pushes projections and
+  * All loads are parquet scans: Catalyst pushes projections and
   * predicates into the scan (column pruning + row-group min/max skipping),
   * which at 100 TB is the difference between reading TBs and reading GBs —
   * callers should `.select`/`.filter` early and let the optimizer do the rest.
-  */
+  *
+  * A table's schema is inferred ONCE PER FILE STATE, then handed to
+  * `spark.read.schema(s)`: schema inference is a footer-reading Spark job
+  * per `spark.read.parquet` call, and a dashboard query that loads five
+  * tables otherwise pays five sequential jobs before it has a plan.
+  *   - Key: the qualified path plus every SQL conf parquet inference reads
+  *     ([[InferenceConfs]]), so a conf flip (e.g. the `events` NANOS
+  *     fallback) infers again instead of serving a schema it would not give.
+  *   - Value: the schema and a fingerprint of the files it was inferred
+  *     from — every leaf file under the path with its length and
+  *     modification time, from one driver-side Hadoop listing (no Spark
+  *     job). A load whose listing differs infers again and replaces the
+  *     entry, so an overwritten table (new part-file names) is never served
+  *     a stale schema. The fingerprint is taken BEFORE inference: a write
+  *     racing the inference leaves an entry that the next load re-checks.
+  *   - A failed inference stores nothing; two threads racing on a miss may
+  *     both infer, which is harmless (no lock is held across the job).
+  * The memo holds only fingerprints and `StructType`s — never frames,
+  * plans or file indexes. */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** The SQL confs Spark 4.1.2's parquet schema inference reads
+    * (`ParquetUtils.inferSchema`, `ParquetFileFormat.mergeSchemasInParallel`,
+    * `SchemaMergeUtils`, `ParquetToSparkSchemaConverter`). */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.caseSensitive")
+
+  private type Fingerprint = Seq[(String, Long, Long)]
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[Option[String]]), (Fingerprint, StructType)]()
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = (fs.makeQualified(p).toString, InferenceConfs.map(spark.conf.getOption))
+    // A missing path fingerprints as empty: inference then raises
+    // Spark's own PATH_NOT_FOUND error, exactly as an unmemoized read.
+    val files: Fingerprint =
+      try {
+        val it = fs.listFiles(p, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        b.result().sorted
+      } catch { case _: FileNotFoundException => Nil }
+    Option(schemas.get(key)) match {
+      case Some((`files`, schema)) => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(key, (files, schema))
+        schema
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

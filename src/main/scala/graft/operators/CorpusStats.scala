@@ -269,9 +269,14 @@ object CorpusStats {
     * never shifts the result, `ln` is the only float op (the q96/q191
     * contract). `low_entropy = 1` below `minEntropy`.
     *
-    * Shape: explode to one row per character occurrence, two-level
-    * aggregate keyed on the doc id — the q192 inverted-index shape,
-    * map-side combinable, linear in corpus bytes. */
+    * Shape: one per-row kernel over each document's own characters,
+    * linear in corpus bytes, no exchange.
+    *
+    * @note `idCol` must be unique. The result has one row per non-null
+    *       input row: rows sharing an id are NOT merged into one
+    *       histogram, unlike [[charEntropySql]], which groups by id
+    *       (CorpusStatsSpec pins the duplicate-id behaviour). No runtime
+    *       check: it would cost a distinct-count job on every call. */
   def charEntropy(docs: DataFrame, idCol: String, textCol: String,
       minEntropy: Double): DataFrame = {
     // Per-ROW kernel, not an aggregation (r19): the former explode →

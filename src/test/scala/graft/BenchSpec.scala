@@ -166,4 +166,21 @@ class BenchSpec extends AnyFunSuite {
     assert(line.contains(
       "\"q02\":[8.10,10.85,15.20,0.30,15.00,0.20,70.10,1.20,33,-30,99,97]"))
   }
+
+  test("a flagged run never overwrites a zero-flag canonical record") {
+    val clean = Some("""{"metric":"total","value":1.0,"flagged":{},"sf":"sf"}""")
+    val noisy = Some("""{"metric":"total","value":9.0,"flagged":{"q05_x":{}},"sf":"sf"}""")
+    def targets(flagged: Boolean, existing: Option[String]) =
+      Bench.fullTargets("BENCH_FULL.json", "32", flagged, existing)
+    assert(targets(false, clean) ==
+      Seq("BENCH_FULL_c32.json", "BENCH_FULL.json"))
+    assert(targets(true, None) == Seq("BENCH_FULL_c32.json",
+      "BENCH_FULL.json", "BENCH_FULL_c32_FLAGGED.json"))
+    assert(targets(true, noisy) == Seq("BENCH_FULL_c32.json",
+      "BENCH_FULL.json", "BENCH_FULL_c32_FLAGGED.json"))
+    // Flagged over clean: the canonical file is untouched, and the
+    // summary's queries_file (the head) names the copy that holds this run.
+    assert(targets(true, clean) ==
+      Seq("BENCH_FULL_c32_FLAGGED.json", "BENCH_FULL.json"))
+  }
 }

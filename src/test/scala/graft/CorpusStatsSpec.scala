@@ -459,6 +459,19 @@ class CorpusStatsSpec extends SparkSpec {
       "all ids ≡ 0 mod 23 → every doc is the planted run")
   }
 
+  test("charEntropy: duplicate ids give one row per input row, never a merged histogram") {
+    // Pins the documented precondition: the per-row kernel does not
+    // group by id, so two rows sharing id 1 keep their own entropies
+    // ("aaaa" → 0, "abcd" → ln 4) instead of one pooled "aaaaabcd" row.
+    val d = docs(1L -> "aaaa", 1L -> "abcd", 2L -> "ab", 3L -> null)
+    val m = CorpusStats.charEntropy(d, "doc_id", "text", minEntropy = 1.0)
+      .collect().map(r => (r.getLong(0), r.getAs[Long]("n_chars"),
+        r.getAs[Double]("char_entropy"))).sortBy(r => (r._1, r._3))
+    def round6(x: Double) = math.rint(x * 1e6) / 1e6
+    assert(m.toSeq == Seq((1L, 4L, 0.0), (1L, 4L, round6(math.log(4))),
+      (2L, 2L, round6(math.log(2)))))
+  }
+
   test("charEntropy kernel is bit-identical to the explode-aggregate formulation") {
     import org.apache.spark.sql.functions._
     import graft.engine.Aggregates

@@ -83,7 +83,7 @@ object DevProbe {
         // the 30 s cap it is the best public-API approximation.
         val stages =
           mutable.ArrayBuffer[(Int, String, Long, Int, Long, Long, Long)]()
-        spark.sparkContext.addSparkListener(new SparkListener {
+        val stageListener = new SparkListener {
           override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
             val si = sc.stageInfo
             val dur = (for {
@@ -96,7 +96,8 @@ object DevProbe {
                 si.taskMetrics.jvmGCTime))
             }
           }
-        })
+        }
+        spark.sparkContext.addSparkListener(stageListener)
         // The listener bus is private[spark]; drain by polling the
         // buffer until it holds still for 500 ms (30 s cap).
         def drained(): Unit = {
@@ -109,7 +110,7 @@ object DevProbe {
             if (n == last) stable += 1 else { stable = 0; last = n }
           }
         }
-        names.foreach { name =>
+        try names.foreach { name =>
           val wall = timed(name)
           drained()
           println(f"[probe] ==== $name wall=$wall%7.2f s ====")
@@ -120,7 +121,7 @@ object DevProbe {
                 f"cpu=${cpu / 1000.0}%8.2f s gc=${gc / 1000.0}%6.2f s  $n2")
           }
           stages.synchronized(stages.clear())
-        }
+        } finally spark.sparkContext.removeSparkListener(stageListener)
 
       case "plan" =>
         names.foreach { name =>
@@ -140,14 +141,15 @@ object DevProbe {
       case "jobs" =>
         val jobs = mutable.ArrayBuffer[(Int, Int)]() // (jobId, nStages)
         val taskCount = new java.util.concurrent.atomic.AtomicLong(0)
-        spark.sparkContext.addSparkListener(new SparkListener {
+        val jobListener = new SparkListener {
           override def onJobStart(
               js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
             jobs.synchronized { jobs += ((js.jobId, js.stageInfos.size)) }
           override def onTaskEnd(
               te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
             taskCount.incrementAndGet()
-        })
+        }
+        spark.sparkContext.addSparkListener(jobListener)
         def jobsDrained(): Unit = {
           val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
           var last = -1L
@@ -158,7 +160,7 @@ object DevProbe {
             if (n == last) stable += 1 else { stable = 0; last = n }
           }
         }
-        names.foreach { name =>
+        try names.foreach { name =>
           jobsDrained()
           jobs.synchronized(jobs.clear()); taskCount.set(0)
           val wall = timed(name)
@@ -167,14 +169,14 @@ object DevProbe {
             (jobs.size, jobs.map(_._2).sum))
           println(f"[probe] $name%-26s wall=$wall%7.2f s " +
             f"jobs=$nJobs%4d stages=$nStages%4d tasks=${taskCount.get()}%5d")
-        }
+        } finally spark.sparkContext.removeSparkListener(jobListener)
 
       // Per-job trace: one line per job with its callSite and timing —
       // answers WHICH driver actions a 100-job query body is made of.
       case "jobtrace" =>
         val trace = mutable.ArrayBuffer[(Int, Long, String)]()
         val ends = mutable.Map[Int, Long]()
-        spark.sparkContext.addSparkListener(new SparkListener {
+        val traceListener = new SparkListener {
           override def onJobStart(
               js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
             val site = Option(js.properties)
@@ -186,7 +188,8 @@ object DevProbe {
           override def onJobEnd(
               je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
             ends.synchronized { ends(je.jobId) = je.time }
-        })
+        }
+        spark.sparkContext.addSparkListener(traceListener)
         def traceDrained(): Unit = {
           val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
           var last = -1
@@ -197,7 +200,7 @@ object DevProbe {
             if (n == last) stable += 1 else { stable = 0; last = n }
           }
         }
-        names.foreach { name =>
+        try names.foreach { name =>
           traceDrained()
           trace.synchronized(trace.clear()); ends.synchronized(ends.clear())
           val wall = timed(name)
@@ -209,7 +212,7 @@ object DevProbe {
               .map(t1 => f"${(t1 - t0) / 1000.0}%7.2f s").getOrElse("  (open)")
             println(f"[probe]   job $id%4d $dur  $site")
           }
-        }
+        } finally spark.sparkContext.removeSparkListener(traceListener)
 
       // `.explain("formatted")` capture for the round's plan-evidence
       // files (plans/rNN/<query>_{before,after}.txt): the formatted

@@ -2,17 +2,28 @@ package graft
 
 import java.sql.Timestamp
 import java.time.LocalDateTime
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType,
+  TimestampNTZType, TimestampType}
 
-import graft.engine.Tables
+import graft.engine.{Sinks, Tables}
 
 /** The events loader must survive testdata regenerations that flip the
   * physical encoding of `ts` (INT64 TIMESTAMP(NANOS) vs plain timestamp[us]).
   * Round 7 closed with 16 event-tier queries broken because the loader
   * hardcoded one encoding; these specs pin every branch of the normalizer so
   * either encoding loads to the same session-TZ TimestampType column.
+  * The schema-memo specs pin that a repeated load runs no Spark job and
+  * that neither an overwrite nor an inference-conf flip serves a stale
+  * schema.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -61,5 +72,87 @@ class TablesSpec extends SparkSpec {
     val out = Tables.normalizeEventTs(reread)
     assert(out.schema("ts").dataType == TimestampType)
     assert(out.count() == 100)
+  }
+
+  /** Spark jobs `body` starts on this thread, counted by a listener keyed
+    * on a job tag. The bus delivers events in order, so once a tagged
+    * sentinel job's start arrives, every job `body` started has been seen. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"tables-spec-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) {
+          if (props.exists(_.getProperty("tables-spec.sentinel") == "1"))
+            drained.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      sc.setLocalProperty("tables-spec.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("tables-spec.sentinel", null)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get()
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a repeated load reuses the inferred schema and starts no Spark job") {
+    val first = Tables.lineitem(spark, sf).schema
+    val n = jobsStartedBy { assert(Tables.lineitem(spark, sf).schema == first) }
+    assert(n == 0, s"second Tables.lineitem started $n Spark jobs")
+  }
+
+  test("an overwritten table is loaded with its new schema") {
+    val dir = s"${Sinks.scratch}/tables-spec-overwrite"
+    Seq((1L, "a")).toDF("id", "s").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("id", "s"))
+    Seq((2L, "b", 3.5)).toDF("id", "s", "x")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val t = Tables.table(spark, dir, "t")
+    assert(t.columns.toSeq == Seq("id", "s", "x"))
+    assert(t.as[(Long, String, Double)].collect().toSeq == Seq((2L, "b", 3.5)))
+  }
+
+  test("a binaryAsString flip is followed, not served a stale schema") {
+    // Spark-written files carry their Spark schema in the footer, which
+    // inference prefers over the conf; an unannotated BINARY column from
+    // a plain parquet writer is what the conf governs.
+    val dir = s"${Sinks.scratch}/tables-spec-binary"
+    val file = new Path(s"$dir/t.parquet")
+    file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(dir), true)
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; optional binary b; }")
+    val w = ExampleParquetWriter.builder(file).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 1L).append("b", "x"))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(Tables.table(spark, dir, "t").schema("b").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val t = Tables.table(spark, dir, "t")
+      assert(t.schema("b").dataType == StringType)
+      assert(t.select("b").as[String].collect().toSeq == Seq("x"))
+      spark.conf.set(key, "false")
+      assert(Tables.table(spark, dir, "t").schema("b").dataType == BinaryType)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 }
