@@ -116,7 +116,10 @@ object Bench {
     def retimeRatio: Double = if (retime.sec > 0) retime.sec / median else -1.0
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: escapes the quote, the backslash and every
+    * control character (<0x20), so hostile names, paths and messages
+    * keep each emitted line parseable. Shared by the probe mains. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -126,7 +129,7 @@ object Bench {
   /** Locale-pinned 2-decimal render: the f-interpolator uses the JVM
     * default locale, and a comma-decimal locale (de_DE, fr_FR, …) would
     * turn the one parseable stdout JSON line into garbage. */
-  private def n2(v: Double): String =
+  private[graft] def n2(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
   /** Hard caps that bound the stdout line regardless of suite size:

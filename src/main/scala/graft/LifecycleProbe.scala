@@ -31,8 +31,7 @@ object LifecycleProbe {
     System.err.println(
       f"[lifecycle] corpus ×$k at $outDir (${(System.nanoTime() - t0) / 1e9}%.1f s)")
 
-    def n2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    import Bench.n2
     def timed[A](what: String)(f: => A): (A, Double) = {
       val s0 = System.nanoTime()
       val r = f

@@ -71,16 +71,8 @@ object ScaleProbe {
         f"[scale] warmFixtures ${(System.nanoTime() - tw) / 1e9}%.2f s (untimed)")
     }
 
-    def n2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // The one parseable stdout line must survive hostile env paths —
-    // same jstr contract as Bench's summary (review finding).
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // The one parseable stdout line must survive hostile env paths.
+    import Bench.{jstr, n2}
     def timed(name: String, dir: String): (Double, Seq[(String, Double)]) = {
       val s0 = System.nanoTime()
       val res = try { SparkEntry.queries(name)(spark, dir).count(); None }

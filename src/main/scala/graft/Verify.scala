@@ -21,26 +21,17 @@ object Verify {
       graft.engine.Caches.release()
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Bench.jstr escapes every control char: a tab or CR in an oracle's
+    // SQL must not make the artifact unparseable.
+    import Bench.jstr
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Self-adjudicating correctness artifact: the queries that carry
     // no oracle BY CONTRACT, with the reason — so a `no_oracle` row in
     // the driver's compare resolves here instead of in prose.
     val exemptions = SparkEntry.oracleExemptions
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(
       Paths.get(s"$outDir/oracle_exemptions.json"), exemptions)
     spark.stop()

@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSql}
 import org.apache.spark.storage.StorageLevel
 
 /** Session-wide registry for operator-internal caches, closing the
@@ -47,8 +47,12 @@ object Caches {
     track(cached)
   }
 
-  /** [[materialized]] plus LOGICAL-PLAN truncation: the returned frame
-    * plans as a `LogicalRDD` over the persisted rows, so a deep
+  /** The one registry-managed PLAN TRUNCATION: persist, run the single
+    * `count()` barrier, track the cache for [[release]], and return the
+    * frame rebased on the cached rows ([[GraftSql.rddPinned]]) together
+    * with that count.
+    *
+    * The returned frame plans as a `LogicalRDD` leaf, so a deep
     * multi-stage composition (the q209 curation DAG) pays analyzer/
     * optimizer/explain cost per STAGE instead of per accumulated
     * lineage. Without this, every downstream plan — and every AQE
@@ -56,30 +60,23 @@ object Caches {
     * measured on the 8-stage pipeline that was a >1 GiB plan STRING
     * (driver OOM) and 100×-ish plan-time blowups on 138-row cached
     * frames, all planning cost, zero execution cost. Execution is
-    * unchanged: the RDD reads the persisted blocks, stays distributed,
-    * and is released with the registry like any other cache. The
-    * trade: Catalyst can no longer push filters/prune columns INTO the
-    * truncated stage — callers truncate only at stage boundaries whose
-    * output they consume whole, exactly the q209 shape. */
-  def truncated(df: DataFrame): DataFrame = {
-    val cached = materialized(df)
-    cached.sparkSession.createDataFrame(cached.rdd, cached.schema)
-  }
-
-  /** [[truncated]] that also RETURNS the barrier count — the
-    * materializing count() is computed either way, so a caller whose
-    * report needs `count(stage output)` can reuse it as a plan-time
-    * literal instead of planning one more aggregation subtree over the
-    * cached rows (the q209/q214 report assembly was ~10 such one-row
-    * agg subtrees per run; each is a partial+final agg pair of stages
-    * in the final action). Values are identical by construction: the
-    * literal IS the count of the rows every downstream consumer
+    * unchanged: the RDD streams the persisted blocks as InternalRows
+    * (never converted to external Rows), stays distributed, and is released
+    * with the registry like any other cache. The trade: Catalyst can no
+    * longer push filters/prune columns INTO the truncated stage —
+    * callers truncate only at stage boundaries whose output they
+    * consume whole, exactly the q209 shape.
+    *
+    * The count is the barrier's own result, so a caller whose report
+    * needs `count(stage output)` reuses it as a plan-time literal
+    * instead of planning one more aggregation subtree over the cached
+    * rows; it IS the count of the rows every downstream consumer
     * reads. */
-  def truncatedCounted(df: DataFrame): (DataFrame, Long) = {
+  def truncated(df: DataFrame): (DataFrame, Long) = {
     val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     val n = cached.count()
     track(cached)
-    (cached.sparkSession.createDataFrame(cached.rdd, cached.schema), n)
+    (GraftSql.rddPinned(cached), n)
   }
 
   /** Unpersist every tracked cache (non-blocking) and forget them.

@@ -1110,13 +1110,6 @@ object CorpusStats {
 
   // --------------------------------------------- persisted BPE model
 
-  /** True iff `dir` holds a COMPLETED BPE model (a published manifest
-    * version — the stored artifacts all run the versioned-manifest
-    * protocol, [[graft.engine.Manifests]]). */
-  def bpeModelExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
-
   /** Train a BPE tokenizer and PERSIST the model — one parquet table
     * `merges` (round, lhs, rhs, n), which IS the tokenizer (the merge
     * list replayed in order segments any text). Completes the stored-

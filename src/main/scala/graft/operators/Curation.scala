@@ -351,8 +351,12 @@ object Curation {
     require(gates.nonEmpty, "need at least one gate")
     val spark = docs.sparkSession
     import spark.implicits._
+    // A NULL gate is a FAIL (coalesced to false): `filter(passes)`
+    // drops a row whose gate is NULL, so the funnel must attribute it
+    // to that gate rather than let it fall through to the -1 survivors.
     val firstFail = gates.zipWithIndex.foldRight(lit(-1)) {
-      case (((_, g), i), acc) => when(!g, lit(i)).otherwise(acc)
+      case (((_, g), i), acc) =>
+        when(!coalesce(g, lit(false)), lit(i)).otherwise(acc)
     }
     // `materialize = true` (standalone default): the gate-counts frame
     // is consumed twice (total + per-gate join), so over a raw corpus
@@ -382,14 +386,16 @@ object Curation {
       .select("stage", "gate", "n_in", "n_dropped", "n_out")
   }
 
-  /** SQL twin of [[filterFunnel]]: gates as (name, boolean-SQL) pairs
-    * in the same order, over `from` (default the raw `documents`
-    * table; `prelude` lets callers prepend CTEs — e.g. a computed
-    * is-survivor relation — that `from` refers to). */
+  /** SQL twin of [[filterFunnel]], NULL gates failing the same way:
+    * gates as (name, boolean-SQL) pairs in the same order, over `from`
+    * (default the raw `documents` table; `prelude` lets callers prepend
+    * CTEs — e.g. a computed is-survivor relation — that `from` refers
+    * to). */
   def filterFunnelSql(gates: Seq[(String, String)],
       prelude: String = "", from: String = "documents"): String = {
     val cases = gates.zipWithIndex
-      .map { case ((_, g), i) => s"WHEN NOT ($g) THEN $i" }.mkString(" ")
+      .map { case ((_, g), i) => s"WHEN NOT COALESCE(($g), FALSE) THEN $i" }
+      .mkString(" ")
     val values = gates.zipWithIndex
       .map { case ((n, _), i) => s"($i, '$n')" }.mkString(", ")
     val pre = if (prelude.isEmpty) "" else prelude + ",\n"

@@ -765,13 +765,6 @@ object Dedup {
 
   // --------------------------------------------- persisted MinHash index
 
-  /** True iff `dir` holds a COMPLETED MinHash index build (a published
-    * manifest version — this family runs the versioned-manifest
-    * protocol, see [[graft.engine.Manifests]]). */
-  def minhashIndexExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
-
   /** Build-once persistence of the REFERENCE side of incremental dedup —
     * the production 100 TB shape [[minhashNearDupAcross]]'s scaladoc
     * promised: shingles and band keys are pure functions of the text,
@@ -1181,11 +1174,6 @@ object Dedup {
 
   // ------------------------------------------ persisted SimHash index
 
-  /** True iff `dir` holds a COMPLETED SimHash index (a published
-    * manifest version). */
-  def simhashIndexExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = graft.engine.Manifests.exists(spark, dir)
-
   /** Build-once persistence of the REFERENCE side of incremental
     * SimHash dedup — the q148/q149 stored-state lifecycle for the
     * third near-dup notion (MinHash: bag-of-shingles overlap; pHash:
@@ -1500,11 +1488,6 @@ object Dedup {
   }
 
   // -------------------------------- persisted eval-gram (decontam) index
-
-  /** True iff `dir` holds a COMPLETED eval-gram index build. */
-  def gramIndexExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
 
   /** Build-once persistence of the EVAL side of decontamination
     * excision — benchmark corpora are stable while training batches
@@ -1971,13 +1954,6 @@ object Dedup {
         sum(lit(1) - col("keep")).cast("long").as("n_dropped"))
 
   // ------------------------------------- persisted line-df index (q207)
-
-  /** Does `dir` hold a COMPLETED line-df index (a published manifest
-    * version — this family runs the versioned-manifest protocol like
-    * the MinHash and BM25 stores)? */
-  def lineIndexExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
 
   /** Per-batch partial line document-frequencies: one row per distinct
     * line hash with the count of distinct `idCol` docs carrying it in

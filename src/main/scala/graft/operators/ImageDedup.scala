@@ -471,10 +471,6 @@ object ImageDedup {
 
   // ---------------------------------------------- persisted pHash index
 
-  /** True iff `dir` holds a COMPLETED pHash index build. */
-  def phashIndexExists(spark: SparkSession, dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
-
   /** Persist the REFERENCE side of incremental media dedup — the
     * production shape [[phashNearDupAcross]]'s scaladoc promised: the
     * reference corpus's hashes are a pure function of its pixels, so a

@@ -138,16 +138,13 @@ object Pipeline {
     lastTimings.toDF("stage", "seconds")
   }
 
-  /** Stage wall clock: `apply` times a plain staged frame, `counted`
-    * times a [[Caches.truncatedCounted]] stage whose barrier count the
-    * report reuses as a literal row (one fewer aggregation subtree in
-    * the final action per reused count). */
+  /** Stage wall clock around a lazy staged frame or a
+    * [[Caches.truncated]] stage, whose barrier count the report reuses
+    * as a literal row (one fewer aggregation subtree in the final
+    * action per reused count). */
   private final class StageTimer {
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def apply(name: String, f: => DataFrame): DataFrame = time(name)(f)
-    def counted(name: String,
-        f: => (DataFrame, Long)): (DataFrame, Long) = time(name)(f)
-    private def time[T](name: String)(f: => T): T = {
+    def apply[T](name: String, f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
       acc += name -> (System.nanoTime() - t0) / 1e9
@@ -200,8 +197,8 @@ object Pipeline {
     // entropy join is inner on the per-doc aggregate of the same rows),
     // so count(gated) = count(docs) — the former separate docs.count()
     // job. The oracle's own spelling counts the same composed relation.
-    val (gatedF, nInput) = staged.counted("1_extract_gate",
-      Caches.truncatedCounted(gatedCorpus(docs, minEntropy)
+    val (gatedF, nInput) = staged("1_extract_gate",
+      Caches.truncated(gatedCorpus(docs, minEntropy)
         .withColumn("passes", gates.map(_._2).reduce(_ && _))))
     val funnel = Curation.filterFunnel(gatedF, gates, materialize = false)
     // Survivors: a lazy filter over the cached gate stage — each
@@ -209,23 +206,23 @@ object Pipeline {
     val surv = staged("2_survivors",
       gatedF.filter(col("passes")).select("doc_id", "lang", "text"))
 
-    val (victims, nVictims) = staged.counted("3_dedup_pairs",
-      Caches.truncatedCounted(Dedup.dedupClusters(
+    val (victims, nVictims) = staged("3_dedup_pairs",
+      Caches.truncated(Dedup.dedupClusters(
         Dedup.prefixJaccardPairs(surv, "doc_id", "text",
           jaccardN, jaccardThreshold))
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as("doc_id"))))
-    val (kept, nKept) = staged.counted("4_dedup_survivors",
-      Caches.truncatedCounted(
+    val (kept, nKept) = staged("4_dedup_survivors",
+      Caches.truncated(
         surv.join(victims, Seq("doc_id"), "left_anti")))
 
-    val scored = staged("5_classify", Caches.truncated(
+    val (scored, _) = staged("5_classify", Caches.truncated(
       QualityClassifier.trainScore(
         kept.filter(col("doc_id") % 3 === 0)
           .withColumn("label_good", col("lang") === "en"),
         "text", "label_good", kept, "doc_id", "text")))
-    val (sel, nSel) = staged.counted("6_classifier_keep",
-      Caches.truncatedCounted(kept.join(
+    val (sel, nSel) = staged("6_classifier_keep",
+      Caches.truncated(kept.join(
         scored.filter(col("is_good") === 1).select("doc_id"), Seq("doc_id"))))
 
     // Budget stays lazy: tokenBudgetSample materializes its prefix-sum
@@ -235,8 +232,8 @@ object Pipeline {
     // 410_budget_tokens leg of the report action).
     val budgeted = staged("7_budget",
       Curation.tokenBudgetSample(sel, "doc_id", "text", budget))
-    val (fin, nFin) = staged.counted("8_final_select",
-      Caches.truncatedCounted(
+    val (fin, nFin) = staged("8_final_select",
+      Caches.truncated(
         sel.join(budgeted.select("doc_id"), Seq("doc_id"))))
     // Pack is consumed exactly once (the 500/510 report leg) — no
     // barrier; packSequences' internal prefix-sum cache is its only job.
@@ -383,7 +380,7 @@ object Pipeline {
     val mhP = liveOf(RunStores.Minhash, minhashIdxDir)
     val qmP = liveOf(RunStores.QualityModel, qualityModelDir)
     val bpeP = liveOf(RunStores.BpeModel, bpeModelDir)
-    val report = Caches.truncated(incrementalCuration(batch,
+    val (report, _) = Caches.truncated(incrementalCuration(batch,
       lineIdxDir, minhashIdxDir, qualityModelDir, bpeModelDir,
       minTokens, minQuality, minEntropy, lineMinDf, dedupThreshold,
       budget, binTokens,
@@ -414,32 +411,32 @@ object Pipeline {
     // reassembly emits one row per input doc — an all-boilerplate doc
     // survives with empty text — and the oracle's own 000 spelling
     // counts the cleansed-joined relation).
-    val (cleansed, nBatch) = staged.counted("1_line_cleanse",
-      Caches.truncatedCounted(
+    val (cleansed, nBatch) = staged("1_line_cleanse",
+      Caches.truncated(
         Dedup.dropBoilerplateFromIndex(batch, lineIdxDir,
           "doc_id", "text", lineMinDf, asOf.lineIdx)))
     val relabeled = cleansed.select(col("doc_id"), col("text"))
       .join(batch.select(col("doc_id"), col("lang")), Seq("doc_id"))
-    val gated = staged("2_extract_gate",
+    val (gated, _) = staged("2_extract_gate",
       Caches.truncated(gatedCorpus(relabeled, minEntropy)
         .withColumn("passes", gates.map(_._2).reduce(_ && _))))
     val funnel = Curation.filterFunnel(gated, gates, materialize = false)
     val surv = staged("3_survivors",
       gated.filter(col("passes")).select("doc_id", "lang", "text"))
 
-    val (victims, nVictims) = staged.counted("4_history_dedup",
-      Caches.truncatedCounted(
+    val (victims, nVictims) = staged("4_history_dedup",
+      Caches.truncated(
         Dedup.minhashNearDupFromIndex(surv, minhashIdxDir,
             "doc_id", "text", dedupThreshold, asOf.minhashIdx)
           .select(col("new_id").as("doc_id")).distinct()))
-    val (kept, nKept) = staged.counted("5_novel", Caches.truncatedCounted(
+    val (kept, nKept) = staged("5_novel", Caches.truncated(
       surv.join(victims, Seq("doc_id"), "left_anti")))
 
-    val scored = staged("6_classify", Caches.truncated(
+    val (scored, _) = staged("6_classify", Caches.truncated(
       QualityClassifier.scoreFromModel(
         kept, qualityModelDir, "doc_id", "text", asOf.qualityModel)))
-    val (sel, nSel) = staged.counted("7_classifier_keep",
-      Caches.truncatedCounted(kept.join(
+    val (sel, nSel) = staged("7_classifier_keep",
+      Caches.truncated(kept.join(
         scored.filter(col("is_good") === 1).select("doc_id"), Seq("doc_id"))))
 
     // Priced/budget/pack are lazy (see [[fullCuration]]): priced and
@@ -451,8 +448,8 @@ object Pipeline {
 
     val budgeted = staged("9_budget",
       Curation.tokenBudgetSample(sel, "doc_id", "text", budget))
-    val (fin, nFin) = staged.counted("10_final_select",
-      Caches.truncatedCounted(
+    val (fin, nFin) = staged("10_final_select",
+      Caches.truncated(
         sel.join(budgeted.select("doc_id"), Seq("doc_id"))))
     val bins = staged("11_pack",
       Curation.packSequences(fin, "doc_id", "text", binTokens))

@@ -51,12 +51,6 @@ import graft.functions.TextFunctions
   */
 object QualityClassifier {
 
-  /** True iff `dir` holds a COMPLETED classifier build (a published
-    * manifest version — the stored artifacts all run the versioned-
-    * manifest protocol, [[graft.engine.Manifests]]). */
-  def modelExists(spark: SparkSession, dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
-
   /** Vocabulary counts + 1-row corpus params of the labeled training
     * frame. `labelCol` must be boolean (true = good). Returned frames
     * are lazy; params = (v, n_pos, n_neg, docs_pos, docs_neg). */

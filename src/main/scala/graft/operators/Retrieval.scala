@@ -236,11 +236,6 @@ object Retrieval {
 
   // ------------------------------------------- persisted BM25 postings
 
-  /** True iff `dir` holds a COMPLETED BM25 postings index (a published
-    * manifest version). */
-  def bm25IndexExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = graft.engine.Manifests.exists(spark, dir)
-
   /** One segment's four partial tables for `docs`, written under
     * `seg`: `postings` (w, doc_id, tf — sorted by term within files,
     * so parquet row-group min/max stats prune non-query terms at scan
@@ -513,7 +508,7 @@ object Retrieval {
     // keeps the corpus scan out of every downstream plan — the
     // spec-asserted "query path reads only stored tables" contract is
     // then visible in the plan itself.
-    val qterms = graft.engine.Caches.truncated(
+    val (qterms, _) = graft.engine.Caches.truncated(
       queries.select(col(idCol).as("query_id"),
           explode(split(col(textCol), " ")).as("w"))
         .distinct())

@@ -1048,15 +1048,6 @@ object Similarity {
 
   // --------------------------------------------------- persisted index
 
-  /** True iff `dir` holds a COMPLETED index build (a published
-    * manifest version — the ANN stores run the same versioned-manifest
-    * protocol as every other persisted artifact,
-    * [[graft.engine.Manifests]]: atomic publish, reader snapshots,
-    * GC past the keep horizon). */
-  def indexExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.engine.Manifests.exists(spark, dir)
-
   /** Train the PQ tables for `corpus` into one segment: `codebook`
     * (written first, READ BACK, and used to encode) + `codes` — the
     * stored index is self-consistent by construction. Shared by the
@@ -1093,7 +1084,8 @@ object Similarity {
     * index is bit-equal to the train-inline [[pqTopK]] with the same
     * parameters (asserted in SimilaritySpec; the oracle replay of the
     * inline twin is therefore also this index's oracle). One atomic
-    * manifest commit; [[indexExists]] gates build-once reuse. */
+    * manifest commit; [[graft.engine.Manifests.exists]] gates
+    * build-once reuse. */
   def buildPqIndex(corpus: DataFrame, dir: String, m: Int, subDim: Int,
       initStride: Long, iters: Int, maxCodebook: Long = 128): Unit = {
     requireFullCoverage(m, subDim)
@@ -1225,11 +1217,9 @@ object Similarity {
       "IVF-PQ index", "append needs a finished build")
     require(snap.tables.contains("cents"),
       s"$dir holds no IVF layer (cents) — use appendToPqIndex")
-    // truncatedCounted: the materializing barrier's count answers the
-    // novelty check directly — the former materialized + isEmpty shape
-    // paid a second driver action per micro-batch for a bit the first
-    // action already knew (r19 serial-job reduction).
-    val (novel, nNovel) = graft.engine.Caches.truncatedCounted(
+    // The truncation barrier's count answers the novelty check, so a
+    // micro-batch pays no second driver action for it.
+    val (novel, nNovel) = graft.engine.Caches.truncated(
       newVectors.select(col("vec_id"), col("embedding"))
         .join(snap.read(spark, "cells").select(col("nid").as("vec_id")),
           Seq("vec_id"), "left_anti"))

@@ -37,7 +37,7 @@ object AnnIngest {
     * embedding)` rows to the completed IVF-PQ index at `indexDir`. */
   def runAvailable(spark: SparkSession, srcDir: String, schema: StructType,
       indexDir: String, checkpointDir: String): Unit = {
-    require(Similarity.indexExists(spark, indexDir),
+    require(graft.engine.Manifests.exists(spark, indexDir),
       s"no completed IVF-PQ index at $indexDir — run buildIvfPqIndex first")
     val q = spark.readStream
       .schema(schema)
@@ -84,7 +84,7 @@ object AnnIngest {
       batch1: DataFrame, batch2: DataFrame, scratchRoot: String,
       queries: DataFrame, corpus: DataFrame, k: Int,
       nProbe: Int): DataFrame = {
-    require(Similarity.indexExists(spark, baseIndexDir),
+    require(graft.engine.Manifests.exists(spark, baseIndexDir),
       s"no completed IVF-PQ index at $baseIndexDir")
     val idx = s"$scratchRoot/index"
     IncrementalIngest.deleteDir(spark, idx)

@@ -463,16 +463,7 @@ object EventStream {
       keepVersions: Int, appId: String): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val live =
-      try graft.engine.Manifests.snapshot(spark, path)
-      catch {
-        // Legacy whole-version layout reads as "corrupted store" to
-        // the resolver — re-diagnose to the migration message (costs
-        // a listing only on the failure path).
-        case e: IllegalStateException =>
-          failIfLegacyLayout(spark, path)
-          throw e
-      }
+    val live = graft.engine.Manifests.snapshot(spark, path)
     val sameApp = live.exists(_.meta.get("txn_app").contains(appId))
     val lastApplied = live.flatMap(_.meta.get("batch_id"))
       .filter(s => s.nonEmpty && s.length <= 18 && s.forall(_.isDigit))
@@ -497,124 +488,6 @@ object EventStream {
     ()
   }
 
-  /** The greatest legacy whole-version snapshot at `path`, if the dir
-    * holds the RETIRED pre-unification upsert layout: `MANIFEST-<N>`
-    * markers naming `v<N>/` parquet DIRECTORIES (the unified layout
-    * names `v<N>` manifest FILES, so one status probe of the live
-    * version's path distinguishes them). */
-  private def legacyLiveVersion(spark: SparkSession,
-      path: String): Option[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("MANIFEST-"))
-      .map(_.stripPrefix("MANIFEST-"))
-      .filter(s => s.nonEmpty && s.length <= 18 && s.forall(_.isDigit))
-      .map(_.toLong).sorted.reverse
-      .find { v =>
-        val vp = new org.apache.hadoop.fs.Path(path, f"v$v%08d")
-        fs.exists(vp) && fs.getFileStatus(vp).isDirectory
-      }
-  }
-
-  /** Tables written by the retired whole-version protocol must fail
-    * with the MIGRATION step, not with Manifests' generic
-    * "corrupted store" (review finding: the unification would
-    * otherwise wedge a healthy pre-upgrade table — every checkpoint
-    * replay re-crashing on a misleading message). */
-  private def failIfLegacyLayout(spark: SparkSession,
-      path: String): Unit =
-    legacyLiveVersion(spark, path).foreach { v =>
-      throw new IllegalStateException(
-        f"$path holds a pre-unification whole-version upsert table " +
-          f"(v$v%08d is a data DIRECTORY, not a manifest file) — run " +
-          "EventStream.migrateUpsertTable(spark, path) once to convert " +
-          "it; the unified sink reads manifest commits only")
-    }
-
-  /** ONE-TIME migration of a retired whole-version upsert table to
-    * the unified manifest layout: the legacy LIVE snapshot becomes
-    * manifest version 1 (tag `migrate_legacy`), older legacy versions
-    * are dropped (they were GC fodder under the old protocol too).
-    * Crash-safe and resumable across EVERY window — the protocol
-    * (re-derived after a review pass found two resume hazards in the
-    * first cut: a leftover legacy marker masquerading as a completed
-    * unified commit deleted the only data copy; a second-oldest
-    * legacy dir renamed ONTO an existing staging dir wedged or
-    * corrupted the read):
-    *
-    *   1. STAGE: rename the legacy live `v<N>/` to `_legacy_data` —
-    *      ONLY if staging does not already exist (a pre-existing
-    *      staging dir is a previous attempt's, already holding the
-    *      then-live version; any v-dirs still present are OLDER and
-    *      are swept, never re-staged);
-    *   2. SWEEP: delete every legacy data DIRECTORY, then every
-    *      marker not backed by a manifest FILE (the unified layout's
-    *      `v<N>` is a file; only that distinguishes a completed
-    *      unified commit's marker from a legacy leftover —
-    *      `Manifests.exists` alone cannot);
-    *   3. COMMIT: if no unified version is published, publish staging
-    *      as version 1 (reclaiming this migration's own crashed
-    *      claim, single-writer by the one-time contract);
-    *   4. CLEAN: delete staging only after the marker is durable.
-    *
-    * A re-run resumes at whichever step the crash left off. No-op on
-    * an already-migrated (or empty) dir. */
-  def migrateUpsertTable(spark: SparkSession, path: String): Unit = {
-    val dirP = new org.apache.hadoop.fs.Path(path)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dirP)) return
-    val staging = new org.apache.hadoop.fs.Path(path, "_legacy_data")
-    def digits(s: String): Boolean =
-      s.nonEmpty && s.length <= 18 && s.forall(_.isDigit)
-    def unifiedManifestFileOf(markerName: String): Boolean = {
-      val s = markerName.stripPrefix("MANIFEST-")
-      digits(s) && {
-        val mf = new org.apache.hadoop.fs.Path(path, f"v${s.toLong}%08d")
-        fs.exists(mf) && fs.getFileStatus(mf).isFile
-      }
-    }
-    // 1. STAGE (first attempt only).
-    if (!fs.exists(staging))
-      legacyLiveVersion(spark, path).foreach { v =>
-        require(fs.rename(new org.apache.hadoop.fs.Path(path, f"v$v%08d"),
-          staging), s"cannot stage legacy v$v of $path for migration")
-      }
-    if (!fs.exists(staging)) return // nothing legacy, nothing staged
-    // 2. SWEEP legacy leftovers: data directories first, then markers
-    // whose version has no unified manifest FILE behind it.
-    fs.listStatus(dirP).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("v") && digits(n.drop(1)) && st.isDirectory)
-        fs.delete(st.getPath, true)
-    }
-    fs.listStatus(dirP).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("MANIFEST-") && digits(n.stripPrefix("MANIFEST-")) &&
-          !unifiedManifestFileOf(n))
-        fs.delete(st.getPath, false)
-    }
-    // 3. COMMIT (unless a previous attempt's commit is already
-    // durable — judged by marker-with-manifest-FILE, the one probe a
-    // legacy leftover cannot fake).
-    val committed = fs.listStatus(dirP).toSeq.map(_.getPath.getName)
-      .exists(n => n.startsWith("MANIFEST-") && unifiedManifestFileOf(n))
-    if (!committed) {
-      graft.engine.Manifests.publish(spark, path, tag = "migrate_legacy",
-        reclaimOwnClaim = true) { (v, seg, _) =>
-        spark.read.parquet(staging.toString)
-          .write.mode("overwrite").parquet(s"$seg/t")
-        Map("t" -> Seq(graft.engine.Manifests.ref(v, "t")))
-      }
-      ()
-    }
-    // 4. CLEAN.
-    fs.delete(staging, true)
-    ()
-  }
-
   /** Reader for a [[startUpsertSink]] table: the live manifest
     * snapshot's single table. A published version is complete by
     * construction and immutable until it ages past the writer's
@@ -630,19 +503,6 @@ object EventStream {
     * [[graft.engine.Manifests.snapshotAt]] on the store every batch
     * commit already writes. None pins nothing (live read). */
   def readUpsertTableAt(spark: SparkSession, path: String,
-      atVersion: Option[Long]): DataFrame = try {
-    readUpsertTableAtResolved(spark, path, atVersion)
-  } catch {
-    // A legacy whole-version table reads as "corrupted store" to the
-    // manifest resolver (marker present, manifest FILE unreadable) —
-    // re-diagnose to the actionable migration message; costs a
-    // listing only on the failure path.
-    case e: IllegalStateException =>
-      failIfLegacyLayout(spark, path)
-      throw e
-  }
-
-  private def readUpsertTableAtResolved(spark: SparkSession, path: String,
       atVersion: Option[Long]): DataFrame = {
     val snap = atVersion match {
       case Some(v) =>

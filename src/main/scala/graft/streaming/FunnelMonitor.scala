@@ -44,7 +44,7 @@ object FunnelMonitor {
     * model at `modelDir` and publishing its funnel rows to `outDir`. */
   def runAvailable(spark: SparkSession, srcDir: String, schema: StructType,
       modelDir: String, outDir: String, checkpointDir: String): Unit = {
-    require(QualityClassifier.modelExists(spark, modelDir),
+    require(graft.engine.Manifests.exists(spark, modelDir),
       s"no completed quality model at $modelDir — run saveModel first")
     val q = spark.readStream
       .schema(schema)

@@ -62,7 +62,7 @@ object StreamingDedup {
   def runAvailable(spark: SparkSession, srcDir: String, schema: StructType,
       indexDir: String, acceptedDir: String, rejectedDir: String,
       checkpointDir: String, threshold: Double = 0.5): Unit = {
-    require(Dedup.minhashIndexExists(spark, indexDir),
+    require(graft.engine.Manifests.exists(spark, indexDir),
       s"no completed MinHash index at $indexDir — run buildMinhashIndex " +
         "over the reference corpus first")
     val q = spark.readStream

@@ -35,14 +35,22 @@ object GraftSql {
     * `generateTreeString` by round ~8 while zero tasks run. Only an
     * RDD-leaf plan is O(1) for analysis AND explain.
     *
+    * FRESH-PLAN RULE: the RDD comes from a new `QueryExecution` over
+    * `df`'s logical plan, never from `df.queryExecution` itself. Cache
+    * substitution (`withCachedData`) is fixed the first time a plan is
+    * forced; a caller that forced `df`'s plan before `persist` would
+    * otherwise get an RDD that ignores the cache, and every consumer
+    * would silently recompute the whole upstream stage.
+    *
     * Rows are copied defensively: columnar-scan iterators reuse row
     * buffers, and `LogicalRDD` consumers assume owned rows (same reason
     * `Dataset.checkpoint` copies). `internalCreateDataFrame` is
     * `private[sql]`, hence exposed here. */
   def rddPinned(df: DataFrame): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val fresh = ofRows(spark, df.queryExecution.logical)
     spark.internalCreateDataFrame(
-      df.queryExecution.toRdd.map(_.copy()), df.schema)
+      fresh.queryExecution.toRdd.map(_.copy()), df.schema)
   }
 
   /** Canonicalize float/double bit patterns (-0.0 → 0.0, NaN → one NaN)

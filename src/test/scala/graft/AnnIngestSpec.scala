@@ -81,7 +81,7 @@ class AnnIngestSpec extends SparkSpec {
     assert(tableCount("codes") == fullCodes)
     assert(tableCount("cells") == fullCells)
     assert(topk(idx) == grown)
-    assert(Similarity.indexExists(spark, idx), "marker re-committed")
+    assert(graft.engine.Manifests.exists(spark, idx), "marker re-committed")
     fs.close()
     graft.engine.Caches.release()
   }

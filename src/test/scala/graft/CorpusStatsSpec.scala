@@ -346,7 +346,7 @@ class CorpusStatsSpec extends SparkSpec {
     // (ab,ab</w>).
     CorpusStats.saveBpeModel(
       docs(1L -> "abab abab ab", 2L -> "abab ab"), "text", rounds = 3, dir)
-    assert(CorpusStats.bpeModelExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     // Replay over the UNSEEN corpus: abab→[abab</w>] (1); abba→
     // [ab,b,a,</w>] (4 — only the first merge fires); zz→[z,z,</w>]
     // (3 — no merge applies, characters survive); ab→[ab</w>] (1);

@@ -171,6 +171,43 @@ class CurationSpec extends SparkSpec {
     graft.engine.Caches.release()
   }
 
+  test("filter funnel conserves docs and agrees with filter(passes) on null, empty and unicode text") {
+    import spark.implicits._
+    // Generated corpus: every 7th text NULL, every 5th empty, the rest
+    // drawn (seeded) from ASCII, combining-mark, CJK, emoji and RTL text.
+    val pool = Seq(
+      "the quick brown fox and the lazy dog",
+      "café naïve résumé of the day",
+      "日本語 の テキスト です",
+      "😀 🚀 emoji and the zebra zone",
+      "مرحبا بالعالم and a word",
+      "a of to is the",
+      "zz")
+    val rnd = new scala.util.Random(20261017L)
+    val docs = (0L until 300L).map { i =>
+      val text =
+        if (i % 7 == 0) null
+        else if (i % 5 == 0) ""
+        else pool(rnd.nextInt(pool.size))
+      (i, text)
+    }.toDF("doc_id", "text")
+    val t = col("text")
+    val gates = Seq(
+      "min_tokens" -> (TextFunctions.tokenCount(t) >= 3),
+      "quality" -> (TextFunctions.qualityScore(t) >= 0.3),
+      "no_z" -> !t.contains("z"))
+    val funnel = Curation.filterFunnel(docs, gates).orderBy("stage")
+      .collect().map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
+    val input = docs.count()
+    val survivors = docs.filter(gates.map(_._2).reduce(_ && _)).count()
+    assert(funnel.head._1 == input)
+    assert(funnel.map(_._2).sum + funnel.last._3 == input,
+      s"funnel does not conserve docs: ${funnel.toSeq}")
+    assert(funnel.last._3 == survivors,
+      s"funnel survivors ${funnel.last._3} != filter(passes) $survivors")
+    graft.engine.Caches.release()
+  }
+
   test("nfc dedup collapses canonically-equivalent byte-distinct texts") {
     import spark.implicits._
     // Doc 1 in decomposed and precomposed spellings (byte-distinct,

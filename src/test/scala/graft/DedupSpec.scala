@@ -299,7 +299,7 @@ class DedupSpec extends SparkSpec {
       "doc_id", "text")
     Dedup.appendToSimhashIndex(ref.filter(col("doc_id") % 2 === 1), dir,
       "doc_id", "text")
-    assert(Dedup.simhashIndexExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     val stored = Dedup.simhashNearDupFromIndex(batch, dir, "doc_id", "text")
       .orderBy("new_id", "ref_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
@@ -420,7 +420,7 @@ class DedupSpec extends SparkSpec {
       "doc_id", "text", n = 3, numHashes = 64, bands = 32)
     Dedup.appendToMinhashIndex(refSide.filter(col("doc_id") % 2 === 1), dir,
       "doc_id", "text")
-    assert(Dedup.minhashIndexExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     val fromIndex = Dedup.minhashNearDupFromIndex(newSide, dir,
       "doc_id", "text", threshold = 0.5)
       .orderBy("new_id", "ref_id").collect()

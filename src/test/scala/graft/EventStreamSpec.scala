@@ -500,87 +500,6 @@ class EventStreamSpec extends SparkSpec {
     assert(state() == Map(1L -> "a-v1", 2L -> "b-v1", 3L -> "c-v1"))
   }
 
-  test("legacy whole-version upsert tables fail with the migration step, and migrate cleanly") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val root = s"${graft.engine.Sinks.scratch}/upsert-legacy-spec"
-    graft.streaming.IncrementalIngest.deleteDir(spark, root)
-    val t = s"$root/t"
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // The RETIRED layout, built exactly as the old sink did: v<N>/
-    // parquet DIRECTORIES published by MANIFEST-<N> markers.
-    Seq(Chg(1L, "old-a", 1L)).toDF()
-      .write.mode("overwrite").parquet(s"$t/v00000001")
-    fs.create(new Path(s"$t/MANIFEST-00000001"), false).close()
-    Seq(Chg(1L, "old-a", 1L), Chg(2L, "old-b", 2L)).toDF()
-      .write.mode("overwrite").parquet(s"$t/v00000002")
-    fs.create(new Path(s"$t/MANIFEST-00000002"), false).close()
-    // Readers and the sink must name the migration, not "corrupted".
-    val e1 = intercept[IllegalStateException](
-      EventStream.readUpsertTable(spark, t))
-    assert(e1.getMessage.contains("migrateUpsertTable"),
-      s"legacy reads must point at the migration: ${e1.getMessage}")
-    val e2 = intercept[IllegalStateException](
-      EventStream.applyUpsertBatch(Seq(Chg(3L, "c", 3L)).toDF(), 0L, t,
-        "k", "ver", 2, appId = "cp"))
-    assert(e2.getMessage.contains("migrateUpsertTable"))
-    // Migration: legacy LIVE content becomes manifest version 1.
-    EventStream.migrateUpsertTable(spark, t)
-    def state(): Map[Long, String] =
-      EventStream.readUpsertTable(spark, t).as[Chg].collect()
-        .map(c => c.k -> c.v).toMap
-    assert(state() == Map(1L -> "old-a", 2L -> "old-b"),
-      "migration must carry the legacy live snapshot")
-    assert(graft.engine.Manifests.liveVersion(spark, t).contains(1L))
-    assert(graft.engine.Manifests.commitMeta(spark, t, 1L)
-      .get("tag").contains("migrate_legacy"))
-    assert(!fs.exists(new Path(s"$t/_legacy_data")),
-      "migration must clean its staging dir")
-    // Idempotent: a re-run is a no-op; the sink continues normally.
-    EventStream.migrateUpsertTable(spark, t)
-    assert(graft.engine.Manifests.liveVersion(spark, t).contains(1L))
-    EventStream.applyUpsertBatch(Seq(Chg(3L, "c", 3L)).toDF(), 0L, t,
-      "k", "ver", 2, appId = "cp")
-    assert(state() == Map(1L -> "old-a", 2L -> "old-b", 3L -> "c"))
-    // Resume path: a migration that died after staging but before the
-    // manifest commit completes on the next run.
-    val root2 = s"${graft.engine.Sinks.scratch}/upsert-legacy-resume"
-    graft.streaming.IncrementalIngest.deleteDir(spark, root2)
-    val t2 = s"$root2/t"
-    Seq(Chg(7L, "g", 1L)).toDF()
-      .write.mode("overwrite").parquet(s"$t2/_legacy_data")
-    EventStream.migrateUpsertTable(spark, t2)
-    assert(EventStream.readUpsertTable(spark, t2).as[Chg]
-      .collect().map(_.k).toSet == Set(7L),
-      "an interrupted migration must complete from staging")
-    // The HARD resume window (second review pass): died after the
-    // rename but BEFORE the marker sweep — staging holds the only
-    // copy of the live data, the renamed-away version's LEGACY marker
-    // is still on disk (and must not read as a completed unified
-    // commit: that misread deleted the data in the first cut), and an
-    // OLDER legacy version's dir is still present (and must be swept,
-    // never re-staged over the existing staging dir).
-    val root3 = s"${graft.engine.Sinks.scratch}/upsert-legacy-crash"
-    graft.streaming.IncrementalIngest.deleteDir(spark, root3)
-    val t3 = s"$root3/t"
-    Seq(Chg(7L, "live", 2L)).toDF()
-      .write.mode("overwrite").parquet(s"$t3/_legacy_data")
-    Seq(Chg(1L, "stale", 1L)).toDF()
-      .write.mode("overwrite").parquet(s"$t3/v00000001")
-    fs.create(new Path(s"$t3/MANIFEST-00000001"), false).close()
-    fs.create(new Path(s"$t3/MANIFEST-00000002"), false).close()
-    EventStream.migrateUpsertTable(spark, t3)
-    val got3 = EventStream.readUpsertTable(spark, t3).as[Chg]
-      .collect().map(c => c.k -> c.v).toMap
-    assert(got3 == Map(7L -> "live"),
-      s"resume must publish the STAGED live data, not the stale dir: $got3")
-    assert(graft.engine.Manifests.liveVersion(spark, t3).contains(1L))
-    assert(!fs.exists(new Path(s"$t3/_legacy_data")) &&
-      !fs.exists(new Path(s"$t3/MANIFEST-00000002")),
-      "resume must clean staging and the orphaned legacy marker")
-  }
-
   test("twoRunUpsert: file-source two-run fold equals global newest-per-key") {
     import spark.implicits._
     val root = s"${graft.engine.Sinks.scratch}/two-run-upsert-spec"

@@ -236,7 +236,7 @@ class ImageDedupSpec extends SparkSpec {
     }
     ImageDedup.buildPhashIndex(refHs.filter(col("img_id") % 2 === 0), dir)
     ImageDedup.appendToPhashIndex(refHs.filter(col("img_id") % 2 === 1), dir)
-    assert(ImageDedup.phashIndexExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     val fromIndex = ImageDedup.phashNearDupAcrossFromIndex(newHs, dir,
       maxHamming = 3).orderBy("new_id", "ref_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq

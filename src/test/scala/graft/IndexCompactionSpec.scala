@@ -51,7 +51,7 @@ class IndexCompactionSpec extends SparkSpec {
     val filesBefore = tableFiles("sh") + tableFiles("bands")
     graft.engine.Caches.release()
     Dedup.compactMinhashIndex(spark, dir)
-    assert(Dedup.minhashIndexExists(spark, dir), "version re-published")
+    assert(graft.engine.Manifests.exists(spark, dir), "version re-published")
     assert(query() == before, "compacted index must answer bit-equally")
     val filesAfter = tableFiles("sh") + tableFiles("bands")
     assert(filesAfter < filesBefore,
@@ -107,7 +107,7 @@ class IndexCompactionSpec extends SparkSpec {
     val filesBefore = hashFiles()
     graft.engine.Caches.release()
     graft.operators.ImageDedup.compactPhashIndex(spark, dir)
-    assert(graft.operators.ImageDedup.phashIndexExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     assert(query() == before, "compacted phash index must answer bit-equally")
     assert(hashFiles() < filesBefore)
     graft.engine.Caches.release()

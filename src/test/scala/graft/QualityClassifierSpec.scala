@@ -73,7 +73,7 @@ class QualityClassifierSpec extends SparkSpec {
       labeled, "text", "label_good", holdout, "doc_id", "text"))
     assert(inline1 == inline2, "same inputs must train the same model")
     QualityClassifier.saveModel(labeled, "text", "label_good", dir)
-    assert(QualityClassifier.modelExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     val stored = scores(QualityClassifier.scoreFromModel(
       holdout, dir, "doc_id", "text"))
     assert(stored == inline1,
@@ -92,7 +92,7 @@ class QualityClassifierSpec extends SparkSpec {
         labeled.filter(col("label_good")), "text", "label_good", dir)
     }
     // The failed single-class build must NOT leave a valid marker.
-    assert(!QualityClassifier.modelExists(spark, dir))
+    assert(!graft.engine.Manifests.exists(spark, dir))
     // The INLINE path refuses identically — without the guard it would
     // silently score everything ±Inf (log-prior undefined).
     assertThrows[IllegalArgumentException] {
@@ -124,7 +124,7 @@ class QualityClassifierSpec extends SparkSpec {
     val after = scores(QualityClassifier.scoreFromModel(holdout, inc,
       "doc_id", "text"))
     assert(after(101L)._2 > after(105L)._2, "ranking survives the append")
-    assert(QualityClassifier.modelExists(spark, inc), "marker re-committed")
+    assert(graft.engine.Manifests.exists(spark, inc), "marker re-committed")
     // Append without a model refuses.
     assertThrows[IllegalArgumentException] {
       QualityClassifier.appendToModel(half2, "text", "label_good",

@@ -157,7 +157,7 @@ class RetrievalSpec extends SparkSpec {
       "doc_id", "text")
     Retrieval.appendToBm25Index(docs.filter(col("doc_id") % 2 === 1), dir,
       "doc_id", "text")
-    assert(Retrieval.bm25IndexExists(spark, dir))
+    assert(graft.engine.Manifests.exists(spark, dir))
     val inline = Retrieval.bm25TopK(docs, "doc_id", "text",
       nQueries = 10, k = 5).orderBy("query_id", "rank").collect().toSeq
     graft.engine.Caches.release()

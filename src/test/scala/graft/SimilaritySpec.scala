@@ -236,7 +236,7 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Double, Int)].collect().toSet
     // Querying before a completed build must fail loudly, not train.
     val pqDir = s"$root/pq"
-    assert(!Similarity.indexExists(spark, pqDir))
+    assert(!graft.engine.Manifests.exists(spark, pqDir))
     val e = intercept[IllegalArgumentException] {
       Similarity.pqTopKFromIndex(queries, emb, pqDir, k = 5)
     }
@@ -247,7 +247,7 @@ class SimilaritySpec extends SparkSpec {
     // equality over raw doubles is the right assertion.
     Similarity.buildPqIndex(emb, pqDir,
       m = 16, subDim = 4, initStride = 3, iters = 1)
-    assert(Similarity.indexExists(spark, pqDir))
+    assert(graft.engine.Manifests.exists(spark, pqDir))
     val storedPq = rows(Similarity.pqTopKFromIndex(queries, emb, pqDir, k = 5))
     val inlinePq = rows(Similarity.pqTopK(queries, emb, k = 5,
       m = 16, subDim = 4, initStride = 3, iters = 1))
@@ -296,7 +296,7 @@ class SimilaritySpec extends SparkSpec {
       assert(before.forall(_._2 % 2 == 0),
         "pre-append the index must only know even ids")
       Similarity.appendToPqIndex(odds, dir)
-      assert(Similarity.indexExists(spark, dir),
+      assert(graft.engine.Manifests.exists(spark, dir),
         "append must re-commit the completion marker")
       // Structural: every vector now carries exactly m codes.
       val n = emb.count()

@@ -85,7 +85,7 @@ class StreamingDedupSpec extends SparkSpec {
       .read(spark, "sh").select("id").collect()
       .map(_.getLong(0)).toSet
     assert(indexed == Set(1L, 2L, 102L, 103L, 202L))
-    assert(Dedup.minhashIndexExists(spark, idx), "version published")
+    assert(graft.engine.Manifests.exists(spark, idx), "version published")
   }
 
   test("streaming path equals the batch twin on identical arrivals") {
