@@ -6,19 +6,33 @@ import graft.engine.{FlightPipeline, Ingest}
 
 /** The golden flight-pipeline test (SURVEY §5 item B): a synthetic mini
   * flight CSV with every documented edge row runs through
-  * Ingest → cleanFlights → dims/wide view → the two cache aggregations,
-  * and the outputs are held against the reference's OWN materialized
-  * artifacts — `/root/reference/airline_monthly_performance.csv` (42
-  * rows) and `/root/reference/airport_performance.csv` (399 rows) — for
-  * exact column sets and shape invariants, with values re-derived on
-  * the fixture (the reference's raw 1.6M-row input is not shipped, so
-  * value parity is pinned on the mini fixture plus formula re-derivation
-  * over the golden rows themselves). */
+  * Ingest → cleanFlights → dims/wide view → the two cache aggregations.
+  *
+  * Column parity of the two caches is pinned from FIXTURES.md §B, which
+  * copies line 1 of the reference's own materialized artifacts,
+  * `/root/reference/airline_monthly_performance.csv` (42 rows) and
+  * `/root/reference/airport_performance.csv` (399 rows). Wherever those
+  * files exist, their line 1 is also held against the pinned lists, so
+  * the documented copy cannot drift. Values are re-derived by hand on
+  * the fixture (the reference's raw 1.6M-row input is not shipped).
+  *
+  * The two golden-row cases (shape invariants and formula re-derivation
+  * over the reference rows themselves) need the artifacts' rows, which no
+  * file in this repository holds: they run only where `/root/reference/`
+  * is present and are canceled elsewhere. */
 class GoldenPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private val refAirlineCsv = "/root/reference/airline_monthly_performance.csv"
   private val refAirportCsv = "/root/reference/airport_performance.csv"
+
+  /** The cache column sets, word for word from FIXTURES.md §B. */
+  private val airlineColumns = Seq("airline_name", "month", "DepDel15_count",
+    "DepDel15_sum", "DepDelayMinutes_mean", "Is_Cancelled_sum",
+    "CarrierDelay_sum", "WeatherDelay_sum", "NASDelay_sum",
+    "LateAircraftDelay_sum", "on_time_rate")
+  private val airportColumns = Seq("airline_name", "month", "origin_city",
+    "total_flights", "delayed_flights", "lat", "lon")
 
   /** The mini fixture (FIXTURES.md §B): 8 rows, 2 airlines, 2 months,
     * 3 cities, covering 2400-wrap, NULL DepTime, all-cause-NULL fill,
@@ -94,6 +108,13 @@ class GoldenPipelineSpec extends SparkSpec {
     try src.getLines().next().split(",").toSeq finally src.close()
   }
 
+  /** Where the reference artifact is present, its line 1 must equal the
+    * pinned copy of its column list. */
+  private def assertRefHeader(path: String, pinned: Seq[String]): Unit =
+    if (new java.io.File(path).exists)
+      assert(refHeader(path) == pinned,
+        s"$path:1 diverges from the FIXTURES.md §B column list")
+
   private def refRowCount(path: String): Int = {
     val src = scala.io.Source.fromFile(path)
     try src.getLines().size - 1 finally src.close()
@@ -142,8 +163,9 @@ class GoldenPipelineSpec extends SparkSpec {
 
   test("airline_monthly_performance: exact reference column set, re-derived values, quirk Q1 documented") {
     val am = FlightPipeline.airlineMonthly(wide)
-    // Column parity with the reference's own golden artifact.
-    assert(am.columns.toSeq == refHeader(refAirlineCsv),
+    // Column parity with the reference's own golden artifact (FIXTURES.md §B).
+    assertRefHeader(refAirlineCsv, airlineColumns)
+    assert(am.columns.toSeq == airlineColumns,
       s"cache-table columns diverge from $refAirlineCsv")
     val got = am.as[(String, Int, Long, Double, Double, Long, Double,
       Double, Double, Double, Double)].collect().toSet
@@ -162,7 +184,8 @@ class GoldenPipelineSpec extends SparkSpec {
   test("airport_performance: exact reference column set, coord dropna, re-derived values") {
     val ap = FlightPipeline.airportPerformance(
       wide, FlightPipeline.coordsDf(spark))
-    assert(ap.columns.toSeq == refHeader(refAirportCsv),
+    assertRefHeader(refAirportCsv, airportColumns)
+    assert(ap.columns.toSeq == airportColumns,
       s"cache-table columns diverge from $refAirportCsv")
     val got = ap.as[(String, Int, String, Long, Double, Double, Double)]
       .collect().toSet
@@ -176,6 +199,8 @@ class GoldenPipelineSpec extends SparkSpec {
   }
 
   test("reference golden shapes: 42-row airline cache = complete 14x3 grid; 399-row airport cache") {
+    Seq(refAirlineCsv, refAirportCsv).foreach(p =>
+      assume(new java.io.File(p).exists, s"$p not present"))
     assert(refRowCount(refAirlineCsv) == 42)
     assert(refRowCount(refAirportCsv) == 399)
     val ref = spark.read.option("header", "true").option("inferSchema", "true")
@@ -188,6 +213,8 @@ class GoldenPipelineSpec extends SparkSpec {
   }
 
   test("formula re-derivation over the golden rows: on_time_rate = 1 - sum/count; coords match the dict") {
+    Seq(refAirlineCsv, refAirportCsv).foreach(p =>
+      assume(new java.io.File(p).exists, s"$p not present"))
     // Our on-time-rate formula reproduces every golden row of the
     // reference's own artifact to FP tolerance.
     val ref = spark.read.option("header", "true").option("inferSchema", "true")
