@@ -49,13 +49,6 @@ package graft
   * all. The read rules live in BENCH_NOTES.md. */
 object Bench {
 
-  /** The hand-kept ingest/sink tier membership, by query number. Public
-    * so BenchSpec can assert it never drifts from the registered suite
-    * (every member must name a real query). */
-  val ingestSinkNums: Set[Int] =
-    Set(31, 32, 33, 34, 41, 48, 49, 69, 91, 93, 101, 105, 115, 116, 123, 124,
-      130, 133, 147)
-
   /** Query-name → number (`q108_scd2_build` → 108); -1 when the name
     * does not follow the `qNN_…` convention. */
   def queryNum(name: String): Int = {
@@ -63,17 +56,10 @@ object Bench {
     if (num.isEmpty) -1 else num.toInt
   }
 
-  /** Budget tier of a query (BASELINE.md "Per-tier bench budgets"):
-    * reference-core = the dashboard's own workload (q01–q21),
-    * ingest_sink = file/JDBC round-trips dominated by IO engines
-    * (parquet/CSV/ORC/JSONL/Derby), extension = everything the engine
-    * adds beyond the reference (dedup, ANN, curation, streaming, …). */
-  def tierOf(name: String): String = {
-    val n = queryNum(name)
-    if (n >= 1 && n <= 21) "core"
-    else if (ingestSinkNums(n)) "ingest_sink"
-    else "extension"
-  }
+  /** Budget tier of a query ([[QuerySpec.Tier]]); a name outside the
+    * registry counts as extension. */
+  def tierOf(name: String): String =
+    SparkEntry.specs.find(_.name == name).fold("extension")(_.tier.name)
 
   /** Flat `{"name": seconds}` ledger (keys starting with `_` are
     * metadata). Parsed with a regex so the library keeps zero JSON
@@ -341,6 +327,7 @@ object Bench {
     // query and discards the timing, so the loop starts on a warm JVM.
     selected.headOption.foreach { case (name, _) =>
       val w = timedRun(name)
+      graft.operators.Pipeline.takeStageSeconds() // discarded with the wall
       System.err.println(
         f"[bench] warmup($name) ${w.sec}%.2f s (discarded)  ${vitals()}")
     }
@@ -381,14 +368,12 @@ object Bench {
       // like the JVM vitals — NOT part of the oracled report): which
       // stage to buy hardware for, readable per round from the partial
       // log without a dev re-run.
-      if (name.startsWith("q209_") || name.startsWith("q214_")) {
-        val stages = graft.operators.Pipeline.lastStageSeconds
-        if (stages.nonEmpty) {
-          val js = stages.map { case (s, sec) => jstr(s) + ":" + n2(sec) }
-            .mkString("{", ",", "}")
-          System.err.println(s"[bench] $name stages: $js")
-          partial.println(s"""{"q":"$name","stages":$js,"sf":"$sfDir"}""")
-        }
+      val stages = graft.operators.Pipeline.takeStageSeconds()
+      if (stages.nonEmpty) {
+        val js = stages.map { case (s, sec) => jstr(s) + ":" + n2(sec) }
+          .mkString("{", ",", "}")
+        System.err.println(s"[bench] $name stages: $js")
+        partial.println(s"""{"q":"$name","stages":$js,"sf":"$sfDir"}""")
       }
       name -> r
     }

@@ -77,18 +77,12 @@ object ScaleProbe {
       val s0 = System.nanoTime()
       val res = try { SparkEntry.queries(name)(spark, dir).count(); None }
         catch { case t: Throwable => Some(t.toString) }
-      // Stage telemetry BEFORE the cache sweep (the Bench read order +
-      // the Bench name guard — lastStageSeconds persists across
-      // queries, so an unguarded read would attribute a pipeline's
-      // stale stages to the next query): a staged query (q209/q214)
-      // leaves one wall per stage — emitted at BOTH scales so a
-      // superlinear stage is measured, not inferred from the total's
-      // concavity.
-      val stages =
-        if (res.isEmpty &&
-            (name.startsWith("q209_") || name.startsWith("q214_")))
-          graft.operators.Pipeline.lastStageSeconds
-        else Seq.empty
+      // Stage telemetry BEFORE the cache sweep (the Bench read order):
+      // a staged pipeline query leaves one wall per stage — emitted at
+      // BOTH scales so a superlinear stage is measured, not inferred
+      // from the total's concavity. Taken after every query, so no
+      // pipeline's stages are left to be read as the next query's.
+      val stages = graft.operators.Pipeline.takeStageSeconds()
       graft.engine.Caches.release()
       spark.catalog.clearCache()
       val sec = (System.nanoTime() - s0) / 1e9

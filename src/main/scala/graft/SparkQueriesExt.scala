@@ -7,18 +7,18 @@ import graft.engine.{Sinks, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{CorpusStats, Curation, Dedup, Multimodal, Privacy, QualityClassifier, Retrieval, Sampling, Similarity}
 
-import SparkEntry.{storedAnnIndex, storedDedupIndex, storedBpeModel, storedByteBpeModel, storedQualityModel, MixtureTargets}
+import SparkEntry.{pipelineFixtures, storedAnnIndex, storedDedupIndex, storedBpeModel, storedByteBpeModel, storedQualityModel, MixtureTargets}
 
 /** Registration segment q148-q212: the stored-state lifecycles
   * (dedup/ANN/tokenizer/classifier indexes), the later LLM-pipeline
   * waves, and the round-15 additions. Split from [[SparkEntry]] purely
-  * for file size; the composed ListMap order (core segment first, this
-  * segment appended) is IDENTICAL to the pre-split registration order —
-  * bench timings read queries in map order, so the order is part of the
+  * for file size; [[SparkEntry.specs]] appends this segment to the core
+  * one, which is IDENTICAL to the pre-split registration order — bench
+  * timings read queries in registry order, so the order is part of the
   * per-query ledger context and is pinned by BenchSpec. */
 private[graft] object SparkQueriesExt {
 
-  def entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+  val specs: Seq[QuerySpec] = Seq(
     // Incremental text dedup from PERSISTED reference state: the q98
     // pipeline with the reference corpus's shingles and LSH bands
     // stored once (build on the even-id half, appended odd half — the
@@ -26,14 +26,14 @@ private[graft] object SparkQueriesExt {
     // batch shingled per run. Same LSH family as q98, so the same
     // exhaustive cross-pair oracle proves the stored state is
     // bit-equal to the inline recompute.
-    "q148_minhash_stored_dedup" -> ((s, dir) => {
+    QuerySpec("q148_minhash_stored_dedup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.minhashNearDupFromIndex(
         docs.filter(col("doc_id") % 3 =!= 0),
         storedDedupIndex(s, dir, "minhash"),
         "doc_id", "text", threshold = 0.5)
         .orderBy("new_id", "ref_id")
-    }),
+    }, fixtures = Seq("dedup" -> "minhash")),
 
     // Incremental media dedup from PERSISTED reference state: the q144
     // pipeline with the reference corpus's perceptual hashes stored
@@ -41,7 +41,7 @@ private[graft] object SparkQueriesExt {
     // hashes ONLY its own images (texturedTwins) and band-joins
     // against the stored table. Same oracle as q144: stored state must
     // be bit-equal to the inline recompute.
-    "q149_phash_stored_dedup" -> ((s, dir) => {
+    QuerySpec("q149_phash_stored_dedup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val newHs = graft.operators.ImageDedup.phashImages(s,
           graft.operators.ImageDedup.texturedTwins(s, docs)).toDF()
@@ -50,7 +50,7 @@ private[graft] object SparkQueriesExt {
       graft.operators.ImageDedup.phashNearDupAcrossFromIndex(
         newHs, storedDedupIndex(s, dir, "phash"), maxHamming = 3)
         .orderBy("new_id", "ref_id")
-    }),
+    }, fixtures = Seq("dedup" -> "phash")),
 
     // Tokenize an UNSEEN corpus with a STORED BPE model: the tokenizer
     // lifecycle's last leg (train q140 → vocab q142 → price own corpus
@@ -60,11 +60,11 @@ private[graft] object SparkQueriesExt {
     // own vocabulary is segmented by replaying the frozen merges —
     // unseen words segment too (characters where no merge applies)
     // instead of silently dropping like a vocabulary join would.
-    "q150_bpe_apply_stored" -> ((s, dir) =>
+    QuerySpec("q150_bpe_apply_stored", (s, dir) =>
       CorpusStats.bpeTokenizeFromModel(
         Tables.documents(s, dir).filter(col("doc_id") % 3 =!= 0),
         "doc_id", "text", storedBpeModel(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), fixtures = Seq("bpemodel" -> "m10")),
 
     // Exact-substring near-dup via winnowing (MOSS): documents sharing
     // a verbatim character run of >= w + k - 1 = 33 chars — the
@@ -72,7 +72,7 @@ private[graft] object SparkQueriesExt {
     // express (q23/q24 match reordered word sets; this matches RUNS).
     // Fingerprint density ~2/(w+1) per gram; candidates equi-join on
     // the selected gram strings, exact by construction.
-    "q151_winnowing_spans" -> ((s, dir) =>
+    QuerySpec("q151_winnowing_spans", (s, dir) =>
       Dedup.winnowedSpanPairs(Tables.documents(s, dir), "doc_id", "text",
         k = 24, w = 10)
         .orderBy("id_a", "id_b")),
@@ -82,7 +82,7 @@ private[graft] object SparkQueriesExt {
     // >= 3 distinct docs is cut from every document — the "cure"
     // companion to q151's detection. Untouched docs pass through, so
     // the oracle also gates the not-boilerplate complement.
-    "q152_boilerplate_excision" -> ((s, dir) =>
+    QuerySpec("q152_boilerplate_excision", (s, dir) =>
       Dedup.exciseBoilerplate(Tables.documents(s, dir), "doc_id", "text",
         k = 24, minDf = 3)
         .orderBy("doc_id")),
@@ -93,7 +93,7 @@ private[graft] object SparkQueriesExt {
     // = 0, standing in for an eval/benchmark corpus) is cut, the rest
     // of the document survives. The span-level upgrade of q95's
     // doc-level decontamination drop.
-    "q153_decontam_excision" -> ((s, dir) => {
+    QuerySpec("q153_decontam_excision", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.exciseContaminated(
         docs.filter(col("doc_id") % 3 =!= 0),
@@ -107,7 +107,7 @@ private[graft] object SparkQueriesExt {
     // slice (doc_id % 3 = 0, standing in for a trusted corpus) — the
     // order-1 cross-corpus upgrade of q96's self-corpus unigram score.
     // Downstream, docs are kept/bucketed by this score.
-    "q154_bigram_logprob" -> ((s, dir) => {
+    QuerySpec("q154_bigram_logprob", (s, dir) => {
       val docs = Tables.documents(s, dir)
       CorpusStats.bigramLogProb(
         docs.filter(col("doc_id") % 3 =!= 0),
@@ -120,7 +120,7 @@ private[graft] object SparkQueriesExt {
     // against the q26 exact ranking — the acceptance metric every ANN
     // deployment tracks, here under the oracle gate (both rankings AND
     // the intersection arithmetic replay in SQL).
-    "q155_ann_recall" -> ((s, dir) => {
+    QuerySpec("q155_ann_recall", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
       val cents = graft.operators.Clustering.kmeansCentroids(
@@ -137,7 +137,7 @@ private[graft] object SparkQueriesExt {
     // never straddle train/test (q46 pins only IDENTICAL text to one
     // side). Same planted corpus as q37, so the LSH clusters equal the
     // oracle's exhaustive-Jaccard clusters.
-    "q156_cluster_safe_splits" -> ((s, dir) => {
+    QuerySpec("q156_cluster_safe_splits", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val clusters = Dedup.dedupClusters(
         Dedup.minhashNearDup(docs, "doc_id", "text",
@@ -152,7 +152,7 @@ private[graft] object SparkQueriesExt {
     // between shifted documents still dedups chunk-for-chunk. Per-doc
     // shared-chunk redundancy stats, chunks crossing the exchange as
     // md5 keys only.
-    "q157_cdc_chunk_dedup" -> ((s, dir) =>
+    QuerySpec("q157_cdc_chunk_dedup", (s, dir) =>
       Dedup.cdcSharedChunkStats(Tables.documents(s, dir), "doc_id", "text",
         k = 16)
         .orderBy("doc_id")),
@@ -161,18 +161,17 @@ private[graft] object SparkQueriesExt {
     // codepoints-per-subword under the q150 stored model — the
     // standard "how fairly does the tokenizer price each language"
     // report of multilingual-tokenizer papers.
-    "q158_bpe_fertility" -> ((s, dir) =>
+    QuerySpec("q158_bpe_fertility", (s, dir) =>
       CorpusStats.bpeFertilityByLang(
         Tables.documents(s, dir).filter(col("doc_id") % 3 =!= 0),
         "lang", "text", storedBpeModel(s, dir))
-        .orderBy("lang"))
-    ,
+        .orderBy("lang"), fixtures = Seq("bpemodel" -> "m10")),
 
     // Embedding-space drift: PSI over SRP sign-bucket histograms
     // between vector snapshot halves — "did the embedding distribution
     // move", which scalar/token PSI can't answer for a vector column.
     // Constant-size state (2^8 bins) regardless of corpus scale.
-    "q159_embedding_drift" -> ((s, dir) => {
+    QuerySpec("q159_embedding_drift", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       graft.operators.Drift.embeddingDrift(
         emb.filter(col("vec_id") % 2 === 0),
@@ -182,7 +181,7 @@ private[graft] object SparkQueriesExt {
     // Cross-source copy matrix: q24's near-dup pairs rolled up by
     // unordered source pair — the provenance audit showing which feeds
     // copy from which before sources are weighted.
-    "q160_source_copy_matrix" -> ((s, dir) => {
+    QuerySpec("q160_source_copy_matrix", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.copyMatrix(docs, "doc_id", "source",
         Dedup.minhashNearDup(docs, "doc_id", "text",
@@ -195,7 +194,7 @@ private[graft] object SparkQueriesExt {
     // amplitude are near in SIGNAL space, not byte space; double-
     // shifted amplitude quantization gives total recall without an
     // all-pairs join, exact |delta| verify on candidates only.
-    "q161_audio_neardup" -> ((s, dir) =>
+    QuerySpec("q161_audio_neardup", (s, dir) =>
       Multimodal.audioNearDup(s, Tables.documents(s, dir))
         .orderBy("id_a", "id_b")),
 
@@ -205,17 +204,17 @@ private[graft] object SparkQueriesExt {
     // oracle gate) and only today's training batch grammed per run.
     // Same oracle as q153: stored state must be bit-equal to the
     // inline recompute.
-    "q162_decontam_stored_excision" -> ((s, dir) => {
+    QuerySpec("q162_decontam_stored_excision", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.exciseFromGramIndex(docs.filter(col("doc_id") % 3 =!= 0),
         storedDedupIndex(s, dir, "evalgrams"), "doc_id", "text")
         .orderBy("doc_id")
-    }),
+    }, fixtures = Seq("dedup" -> "evalgrams")),
 
     // MRR companion to q155: recall says how much of the truth the IVF
     // ranking retrieves, MRR says how EARLY — what matters when a
     // re-ranker or an LLM reads only the head of the list.
-    "q163_ann_mrr" -> ((s, dir) => {
+    QuerySpec("q163_ann_mrr", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
       val cents = graft.operators.Clustering.kmeansCentroids(
@@ -231,7 +230,7 @@ private[graft] object SparkQueriesExt {
     // scores ONLY its new batch against it (checkpointed exactly-once,
     // batch ids monotone across runs). Per-batch cost independent of
     // reference size.
-    "q164_stream_drift_monitor" -> ((s, dir) => {
+    QuerySpec("q164_stream_drift_monitor", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       graft.streaming.DriftMonitor.twoRunMonitor(s,
         emb.filter(col("vec_id") % 3 === 0),
@@ -245,7 +244,7 @@ private[graft] object SparkQueriesExt {
     // apply IN ORDER, each doc attributed to the FIRST gate it fails,
     // so per-gate drops are marginal, not overlap-confounded. One
     // corpus scan; all funnel arithmetic on the gates-sized frame.
-    "q165_filter_funnel" -> ((s, dir) => {
+    QuerySpec("q165_filter_funnel", (s, dir) => {
       val t = col("text")
       Curation.filterFunnel(Tables.documents(s, dir), Seq(
         "min_tokens" -> (TextFunctions.tokenCount(t) >= 10),
@@ -258,7 +257,7 @@ private[graft] object SparkQueriesExt {
     // N-gram novelty: the memorization/contamination MEASUREMENT (q95
     // is the binary decision) — fraction of each training doc's
     // distinct 8-grams absent from the reference slice.
-    "q166_ngram_novelty" -> ((s, dir) => {
+    QuerySpec("q166_ngram_novelty", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Curation.ngramNovelty(
         docs.filter(col("doc_id") % 3 =!= 0),
@@ -271,7 +270,7 @@ private[graft] object SparkQueriesExt {
     // the first funnel gate, quality gates after — the end-to-end
     // ablation table a curation run publishes, with every drop
     // attributed to exactly one stage.
-    "q167_curation_report" -> ((s, dir) => {
+    QuerySpec("q167_curation_report", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val victims = Dedup.dedupClusters(
           Dedup.minhashNearDup(docs, "doc_id", "text",
@@ -291,7 +290,7 @@ private[graft] object SparkQueriesExt {
     // slice (reference third; label = target-language docs, the CCNet
     // framing), applied to the unseen rest. Training is pure counting,
     // so the oracle replays the whole train-then-score chain exactly.
-    "q168_quality_classifier" -> ((s, dir) => {
+    QuerySpec("q168_quality_classifier", (s, dir) => {
       val docs = Tables.documents(s, dir)
       QualityClassifier.trainScore(
         docs.filter(col("doc_id") % 3 === 0)
@@ -305,26 +304,26 @@ private[graft] object SparkQueriesExt {
     // once, marker-gated — the q150 lifecycle): the per-arrival leg of
     // the quality stage, zero training recompute, bit-equal to q168's
     // inline twin — so ONE oracle adjudicates both paths.
-    "q169_quality_stored_score" -> ((s, dir) => {
+    QuerySpec("q169_quality_stored_score", (s, dir) => {
       val docs = Tables.documents(s, dir)
       QualityClassifier.scoreFromModel(
         docs.filter(col("doc_id") % 3 =!= 0),
         storedQualityModel(s, dir), "doc_id", "text")
         .orderBy("doc_id")
-    }),
+    }, fixtures = Seq("qualitymodel" -> "nb")),
 
     // BYTE-level BPE trainer (GPT-2 bytes-to-unicode): q140's twin
     // over the byte alphabet — never drops a character of any script,
     // prices digits/punctuation/whitespace. The oracle carries the
     // 256-row byte mapping as a literal table.
-    "q170_byte_bpe_train" -> ((s, dir) =>
+    QuerySpec("q170_byte_bpe_train", (s, dir) =>
       CorpusStats.byteBpeTrain(Tables.documents(s, dir),
         "text", rounds = 10).orderBy("round")),
 
     // Byte-level token pricing (q146's twin): per-document pre-token /
     // byte / token counts under the trained byte merges — n_bytes is
     // the losslessness invariant (tokens only ever merge bytes).
-    "q171_byte_bpe_tokenize" -> ((s, dir) =>
+    QuerySpec("q171_byte_bpe_tokenize", (s, dir) =>
       CorpusStats.byteBpeTokenize(Tables.documents(s, dir),
         "doc_id", "text", rounds = 10).orderBy("doc_id")),
 
@@ -332,7 +331,7 @@ private[graft] object SparkQueriesExt {
     // blocklist LEFT ANTI -> per-domain content-hash cap -> per-host
     // rollup with near-dup involvement and mean quality — the table a
     // pipeline reads to set per-source weights.
-    "q172_domain_curation" -> ((s, dir) => {
+    QuerySpec("q172_domain_curation", (s, dir) => {
       val kept = graft.operators.DomainCuration.capPerDomain(
         graft.operators.DomainCuration.applyBlocklist(
           Tables.documents(s, dir), "source", Seq("src0", "src13")),
@@ -349,7 +348,7 @@ private[graft] object SparkQueriesExt {
     // its per-gate ablation rows idempotently under its batch id — the
     // q164 monitor pattern applied to the q165 funnel. Two-run demo:
     // the second drain funnels ONLY batch 2 and numbers it across runs.
-    "q173_stream_funnel_monitor" -> ((s, dir) => {
+    QuerySpec("q173_stream_funnel_monitor", (s, dir) => {
       val applySlice = Tables.documents(s, dir)
         .filter(col("doc_id") % 3 =!= 0)
       graft.streaming.FunnelMonitor.twoRunFunnel(s,
@@ -358,17 +357,17 @@ private[graft] object SparkQueriesExt {
         applySlice.filter(col("doc_id") % 2 === 0),
         s"${Sinks.scratch}/q173")
         .orderBy("batch_id", "stage")
-    }),
+    }, fixtures = Seq("qualitymodel" -> "nb")),
 
     // Byte-level tokenizer lifecycle's last leg (q150's byte twin):
     // price an UNSEEN corpus with the STORED byte model — unseen
     // pre-tokens segment (bytes where no merge applies) instead of
     // dropping; every non-empty doc emits a row by construction.
-    "q174_byte_bpe_apply_stored" -> ((s, dir) =>
+    QuerySpec("q174_byte_bpe_apply_stored", (s, dir) =>
       CorpusStats.byteBpeTokenizeFromModel(
         Tables.documents(s, dir).filter(col("doc_id") % 3 =!= 0),
         "doc_id", "text", storedByteBpeModel(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), fixtures = Seq("bpemodel" -> "b10")),
 
     // INCREMENTAL model update: train on half the labeled corpus,
     // appendToModel the other half, score — the oracle replays the
@@ -376,7 +375,7 @@ private[graft] object SparkQueriesExt {
     // bit-for-bit (counts are a sufficient statistic; the timed body
     // deliberately includes the build+append, which IS this query's
     // operator).
-    "q175_quality_model_update" -> ((s, dir) => {
+    QuerySpec("q175_quality_model_update", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val train = docs.filter(col("doc_id") % 3 === 0)
         .withColumn("label_good", col("lang") === "en")
@@ -394,7 +393,7 @@ private[graft] object SparkQueriesExt {
     // Top-quantile keep per language (FineWeb's "keep the best X%"):
     // stored-model scores cut at the best 25% of each language —
     // per-stratum rank windows, never a global sort.
-    "q176_quality_topq_keep" -> ((s, dir) => {
+    QuerySpec("q176_quality_topq_keep", (s, dir) => {
       val docs = Tables.documents(s, dir).filter(col("doc_id") % 3 =!= 0)
       val scored = docs.join(
         QualityClassifier.scoreFromModel(docs, storedQualityModel(s, dir),
@@ -404,22 +403,22 @@ private[graft] object SparkQueriesExt {
         "doc_id", q = 0.25)
         .select("doc_id", "lang", "quality_score")
         .orderBy("doc_id")
-    }),
+    }, fixtures = Seq("qualitymodel" -> "nb")),
 
     // Byte-tokenizer fairness/compression audit (q158's byte twin):
     // per-language fertility AND bytes-per-token under the stored byte
     // model — the GPT-style "which scripts pay full byte cost" table.
-    "q177_byte_bpe_fertility" -> ((s, dir) =>
+    QuerySpec("q177_byte_bpe_fertility", (s, dir) =>
       CorpusStats.byteBpeFertilityByLang(
         Tables.documents(s, dir).filter(col("doc_id") % 3 =!= 0),
         "lang", "text", storedByteBpeModel(s, dir))
-        .orderBy("lang")),
+        .orderBy("lang"), fixtures = Seq("bpemodel" -> "b10")),
 
     // Semantic decontamination: drop training vectors near-parallel to
     // ANY eval vector — the embedding-space leak no lexical gram gate
     // sees (a paraphrased benchmark answer keeps its direction). Cell-
     // bucketed new x ref, best match per contaminated id.
-    "q178_semantic_decontam" -> ((s, dir) => {
+    QuerySpec("q178_semantic_decontam", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val ref = emb.filter(col("vec_id") % 3 === 0)
       val cents = ref.filter(col("vec_id") % 53 === 0)
@@ -435,7 +434,7 @@ private[graft] object SparkQueriesExt {
     // NFC-keyed grouping collapses them (n_raw_forms = 2 exactly where
     // the marker occurs); byte-exact dedup cannot. The normalization
     // stage every pipeline runs before fingerprinting anything.
-    "q179_nfc_dedup" -> ((s, dir) => {
+    QuerySpec("q179_nfc_dedup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val variants = docs.select(col("doc_id"),
           regexp_replace(col("text"), Curation.NfdMarker,
@@ -452,19 +451,19 @@ private[graft] object SparkQueriesExt {
     // (Mann-Whitney closed form) — the acceptance gate a model passes
     // before it may filter a corpus; q155/q163's evaluation discipline
     // applied to the quality stage.
-    "q180_quality_eval" -> ((s, dir) => {
+    QuerySpec("q180_quality_eval", (s, dir) => {
       val docs = Tables.documents(s, dir)
       QualityClassifier.evaluateFromModel(
         docs.filter(col("doc_id") % 3 =!= 0)
           .withColumn("label_good", col("lang") === "en"),
         storedQualityModel(s, dir), "doc_id", "text", "label_good")
-    }),
+    }, fixtures = Seq("qualitymodel" -> "nb")),
 
     // Soft dedup (SoftDedup, ACL 2024): keep every near-duplicate but
     // weight it by 1/cluster-size, so each piece of content carries
     // constant gradient mass — the reweighting alternative to q38's
     // hard removal, over the same MinHash cluster machinery.
-    "q181_softdedup_weights" -> ((s, dir) => {
+    QuerySpec("q181_softdedup_weights", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Sampling.softDedupWeights(docs,
         Dedup.minhashNearDup(docs, "doc_id", "text",
@@ -478,7 +477,7 @@ private[graft] object SparkQueriesExt {
     // codebook, replay-safe appends), query the grown index —
     // bit-equal to q138's bulk append, so the same oracle adjudicates
     // the whole streamed lifecycle.
-    "q182_stream_ann_ingest" -> ((s, dir) => {
+    QuerySpec("q182_stream_ann_ingest", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       graft.streaming.AnnIngest.twoRunIngestFromBase(s,
         storedAnnIndex(s, dir, "ivfpq_base"),
@@ -487,7 +486,7 @@ private[graft] object SparkQueriesExt {
         s"${Sinks.scratch}/q182",
         emb.filter(col("vec_id") < 10), emb, k = 5, nProbe = 3)
         .orderBy("query_id", "rank")
-    }),
+    }, fixtures = Seq("ann" -> "ivfpq_base")),
 
     // Language-ID evaluation: the documents table carries a TRUE lang
     // label, so the n-gram/function-word heuristic gets the same
@@ -495,7 +494,7 @@ private[graft] object SparkQueriesExt {
     // (q155/q163) — a confusion matrix with per-true-language shares.
     // One scan, one (lang, pred)-keyed aggregation (≤ |langs|² rows),
     // the share window runs over that aggregated frame.
-    "q183_langid_eval" -> ((s, dir) => {
+    QuerySpec("q183_langid_eval", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       Tables.documents(s, dir)
         .select(col("lang"),
@@ -511,7 +510,7 @@ private[graft] object SparkQueriesExt {
     // exact q95 plan (no false negatives; false positives die in the
     // exact join), but corpus grams that miss the benchmark are dropped
     // MAP-SIDE before the exchange: the 100 TB decontamination shape.
-    "q184_bloom_decontam" -> ((s, dir) => {
+    QuerySpec("q184_bloom_decontam", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Curation.decontaminateBloomPruned(docs,
         docs.filter(col("doc_id") % 89 === 0),
@@ -523,7 +522,7 @@ private[graft] object SparkQueriesExt {
     // leg of q126 lacks. Same scale shape as that leg: corpus tf table
     // built once, query vocabulary broadcast, only (query, candidate)
     // partials cross the exchange.
-    "q185_bm25_topk" -> ((s, dir) =>
+    QuerySpec("q185_bm25_topk", (s, dir) =>
       Retrieval.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
         nQueries = 10, k = 5).orderBy("query_id", "rank")),
 
@@ -531,7 +530,7 @@ private[graft] object SparkQueriesExt {
     // many word types debut there — the "is this source still yielding
     // new language" curve; one scan + one word-keyed min, cumulative
     // windows over the 10-row bucket frame only.
-    "q186_vocab_growth" -> ((s, dir) =>
+    QuerySpec("q186_vocab_growth", (s, dir) =>
       CorpusStats.vocabGrowth(Tables.documents(s, dir), "doc_id", "text",
         buckets = 10).orderBy("bucket")),
 
@@ -539,20 +538,20 @@ private[graft] object SparkQueriesExt {
     // empirical positive rate — the reliability diagram a curator reads
     // before turning scores into a hard keep threshold (q180 says HOW
     // WELL it ranks; this says WHAT the scores mean).
-    "q187_quality_calibration" -> ((s, dir) => {
+    QuerySpec("q187_quality_calibration", (s, dir) => {
       val docs = Tables.documents(s, dir)
       QualityClassifier.calibrationFromModel(
         docs.filter(col("doc_id") % 3 =!= 0)
           .withColumn("label_good", col("lang") === "en"),
         storedQualityModel(s, dir), "doc_id", "text", "label_good",
         bins = 10).orderBy("bin")
-    }),
+    }, fixtures = Seq("qualitymodel" -> "nb")),
 
     // Effective dataset size under soft-dedup weights: per language,
     // raw vs weight-discounted doc/token volume — the redundancy gap
     // the q181 reweighting exists to control, and the per-language
     // budget input for a temperature mix over DEDUPLICATED mass.
-    "q188_effective_size" -> ((s, dir) => {
+    QuerySpec("q188_effective_size", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Sampling.effectiveCorpusSize(docs,
         Dedup.minhashNearDup(docs, "doc_id", "text",
@@ -565,7 +564,7 @@ private[graft] object SparkQueriesExt {
     // redact exactly the valid one (regex-only scrubbing would take
     // both; 90% of random 16-digit strings are NOT cards). The oracle
     // replays the Luhn arithmetic, not the planted layout.
-    "q189_card_scrub" -> ((s, dir) => {
+    QuerySpec("q189_card_scrub", (s, dir) => {
       val (valid, invalid) = Privacy.plantedCards(col("doc_id"))
       val aug = Tables.documents(s, dir).select(col("doc_id"),
         concat(col("text"), lit(" card "), valid, lit(" ref "), invalid)
@@ -577,7 +576,7 @@ private[graft] object SparkQueriesExt {
     // 32-token windows sliding by 24 (8-token overlap), offsets and
     // chunk ids pure arithmetic on the token count. Map-only; the row
     // multiplication IS the downstream embedder's input.
-    "q190_chunking" -> ((s, dir) =>
+    QuerySpec("q190_chunking", (s, dir) =>
       Curation.chunkDocuments(Tables.documents(s, dir), "doc_id", "text",
         windowTokens = 32, strideTokens = 24)
         .orderBy("doc_id", "chunk_id")),
@@ -586,7 +585,7 @@ private[graft] object SparkQueriesExt {
     // language sits near slope -1; drift toward 0 is boilerplate
     // domination. Head selection is a deterministic take-ordered; the
     // regression runs on the <=100-row head frame.
-    "q191_zipf_slope" -> ((s, dir) =>
+    QuerySpec("q191_zipf_slope", (s, dir) =>
       CorpusStats.zipfSlope(Tables.documents(s, dir), "doc_id", "text",
         topK = 100)),
 
@@ -594,7 +593,7 @@ private[graft] object SparkQueriesExt {
     // lines (boilerplate planted into every 5th doc — a repeated
     // header), then score duplicate-line and duplicate-char fractions
     // against the published thresholds. One explode + two-level agg.
-    "q192_gopher_lines" -> ((s, dir) => {
+    QuerySpec("q192_gopher_lines", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val folded = docs.select(col("doc_id"),
         CorpusStats.gopherLines(col("doc_id"), col("text"),
@@ -606,7 +605,7 @@ private[graft] object SparkQueriesExt {
     // Encoding-hygiene gate: detect double-encoding mojibake digraphs,
     // U+FFFD replacement chars, and bare C0 controls (planted on a 7/11/
     // 13 schedule so overlap docs carry several). Map-only codegen pass.
-    "q193_mojibake_gate" -> ((s, dir) => {
+    QuerySpec("q193_mojibake_gate", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Curation.encodingAudit(
         docs.select(col("doc_id"),
@@ -618,7 +617,7 @@ private[graft] object SparkQueriesExt {
     // SFT-transcript intake gate: each doc becomes a 4-message JSON
     // chat (role-order bug planted every 13th, truncated-empty turn
     // every 17th); from_json + array HOFs validate structure. Map-only.
-    "q194_chat_validate" -> ((s, dir) => {
+    QuerySpec("q194_chat_validate", (s, dir) => {
       val docs = Tables.documents(s, dir)
       graft.operators.ChatData.validateTranscripts(
         docs.select(col("doc_id"),
@@ -630,7 +629,7 @@ private[graft] object SparkQueriesExt {
     // URL canonicalization + canonical-key dup report: scheme/www/case/
     // slash/tracking-param/fragment noise collapsed by a pure regex
     // projection, then one hash agg on the canonical key (q22's plan).
-    "q195_url_canonical" -> ((s, dir) => {
+    QuerySpec("q195_url_canonical", (s, dir) => {
       val docs = Tables.documents(s, dir)
       graft.operators.DomainCuration.canonicalUrlReport(
         docs.select(col("doc_id"),
@@ -643,14 +642,14 @@ private[graft] object SparkQueriesExt {
     // exact n-gram Jaccard truth — the method-selection table; the
     // minhash row doubles as a band-scheme regression test (must equal
     // the truth set exactly).
-    "q196_dedup_eval" -> ((s, dir) =>
+    QuerySpec("q196_dedup_eval", (s, dir) =>
       Dedup.dedupMethodEval(Tables.documents(s, dir), "doc_id", "text",
         n = 3, threshold = 0.5).orderBy("method")),
 
     // HTML→text extraction: strip script/style/tags, decode entities in
     // contract order, squash whitespace — the raw-crawl intake stage.
     // Pure regex/replace projection chain, map-only.
-    "q197_html_extract" -> ((s, dir) => {
+    QuerySpec("q197_html_extract", (s, dir) => {
       val docs = Tables.documents(s, dir)
       graft.operators.WebText.extractText(
         docs.select(col("doc_id"),
@@ -662,7 +661,7 @@ private[graft] object SparkQueriesExt {
     // CCNet cross-doc line dedup: line-df excision of boilerplate that
     // appears once per document across many documents (planted every
     // 3rd doc). Lines shuffle as md5 keys; order-preserving reassembly.
-    "q198_line_dedup" -> ((s, dir) => {
+    QuerySpec("q198_line_dedup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.dropBoilerplateLines(
         docs.select(col("doc_id"),
@@ -674,13 +673,13 @@ private[graft] object SparkQueriesExt {
     // Context-window fit: per candidate sequence length, docs that fit,
     // docs chunking must split, and the token mass truncate-at-L would
     // discard. One scan × broadcast windows list; windows-sized output.
-    "q199_context_fit" -> ((s, dir) =>
+    QuerySpec("q199_context_fit", (s, dir) =>
       Curation.contextFitReport(Tables.documents(s, dir), "text",
         windows = Seq(16, 32, 64)).orderBy("window")),
 
     // License-aware curation: broadcast provenance dim → per-license
     // compliance rollup (sources, docs, token mass, usable flag).
-    "q200_license_audit" -> ((s, dir) => {
+    QuerySpec("q200_license_audit", (s, dir) => {
       val docs = Tables.documents(s, dir)
       graft.operators.DomainCuration.licenseAudit(docs,
         graft.operators.DomainCuration.syntheticLicenses(docs, "source"),
@@ -690,14 +689,14 @@ private[graft] object SparkQueriesExt {
     // Data-mixture plan: per-language sampling rates/epochs against a
     // token budget and target proportions; 'ja' has a target but no
     // data — the plan must fail loudly on it, not renormalize silently.
-    "q201_mixture_plan" -> ((s, dir) =>
+    QuerySpec("q201_mixture_plan", (s, dir) =>
       graft.operators.Selection.mixturePlan(Tables.documents(s, dir),
         "lang", "text", targets = MixtureTargets, budget = 40000L,
         maxEpochs = 4).orderBy("lang")),
 
     // Embedding intake QA: wrong-dim / NaN / zero-norm counts + the
     // healthy norm distribution (corruption planted on 31/41/53).
-    "q202_embedding_qa" -> ((s, dir) => {
+    QuerySpec("q202_embedding_qa", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.embeddingQa(
         emb.select(col("vec_id"),
@@ -709,7 +708,7 @@ private[graft] object SparkQueriesExt {
     // Character-entropy gate: Shannon entropy of the per-doc char
     // distribution flags key-mash/padding/base64 degeneracy (planted
     // every 23rd doc). Exact-decimal Σ; ln the only float op.
-    "q203_char_entropy" -> ((s, dir) => {
+    QuerySpec("q203_char_entropy", (s, dir) => {
       val docs = Tables.documents(s, dir)
       CorpusStats.charEntropy(
         docs.select(col("doc_id"),
@@ -722,7 +721,7 @@ private[graft] object SparkQueriesExt {
     // micro-batch validated, routed to accepted/quarantine sinks with
     // first-fail reasons, idempotent per batch id. Two-run demo; the
     // report rolls up both sinks per (batch, reason).
-    "q204_stream_chat_intake" -> ((s, dir) => {
+    QuerySpec("q204_stream_chat_intake", (s, dir) => {
       val t = Tables.documents(s, dir).select(col("doc_id"),
         graft.operators.ChatData.syntheticTranscript(
           col("doc_id"), col("text")).as("transcript"))
@@ -735,7 +734,7 @@ private[graft] object SparkQueriesExt {
 
     // Keyword safety gate with category attribution (C4 badwords
     // stage): native marker kernels, map-only; planted on 19/29.
-    "q206_safety_gate" -> ((s, dir) => {
+    QuerySpec("q206_safety_gate", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Curation.safetyGate(
         docs.select(col("doc_id"),
@@ -746,14 +745,14 @@ private[graft] object SparkQueriesExt {
     // Dataset card: the one-artifact corpus summary a release ships
     // with (volumes, lang mix, dup/PII/safety rates, quality) — one
     // scan, two bounded consumers, (metric, value) rows.
-    "q208_dataset_card" -> ((s, dir) =>
+    QuerySpec("q208_dataset_card", (s, dir) =>
       Curation.datasetCard(Tables.documents(s, dir), "text", "lang")
         .orderBy("metric")),
 
     // Line-dedup from PERSISTED reference state: new batches cleansed
     // against the stored boilerplate line frequencies (build + tagged
     // append untimed via the linedf fixture), q148/q162 lifecycle.
-    "q207_line_df_stored" -> ((s, dir) => {
+    QuerySpec("q207_line_df_stored", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val batch = docs.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), Dedup.plantBoilerplate(col("doc_id"),
@@ -761,11 +760,11 @@ private[graft] object SparkQueriesExt {
       Dedup.dropBoilerplateFromIndex(batch,
         storedDedupIndex(s, dir, "linedf"),
         "doc_id", "text", minDf = 5).orderBy("doc_id")
-    }),
+    }, fixtures = Seq("dedup" -> "linedf")),
 
     // nDCG of the IVF ranking vs the exact one (graded gains = exact
     // cosines) — completes the ANN eval triple beside q155/q163.
-    "q205_ann_ndcg" -> ((s, dir) => {
+    QuerySpec("q205_ann_ndcg", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
       val cents = graft.operators.Clustering.kmeansCentroids(
@@ -783,7 +782,7 @@ private[graft] object SparkQueriesExt {
     // card (q208), reported as a single (metric, value) table. The
     // oracle replays the SAME DAG composed from each stage's own
     // from-parameterized SQL twin — see graft.operators.Pipeline.
-    "q209_full_pipeline" -> ((s, dir) =>
+    QuerySpec("q209_full_pipeline", (s, dir) =>
       graft.operators.Pipeline.fullCuration(Tables.documents(s, dir))
         .orderBy("metric")),
 
@@ -794,7 +793,7 @@ private[graft] object SparkQueriesExt {
     // capped at |cell|/k), adaptive spills exactly where needed and
     // stays under fixed-2's probe budget. Oracle replays the cell
     // ranking, the spill rule, and the recall aggregation.
-    "q210_adaptive_probe" -> ((s, dir) => {
+    QuerySpec("q210_adaptive_probe", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
       val cents = graft.operators.Clustering.kmeansCentroids(
@@ -808,19 +807,19 @@ private[graft] object SparkQueriesExt {
     // maxProbe — the production knob for the persisted path. Oracle =
     // the same train-inline replay as q136 with the spill rule
     // substituted for the fixed probe.
-    "q211_ivfpq_adaptive" -> ((s, dir) => {
+    QuerySpec("q211_ivfpq_adaptive", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.ivfPqTopKFromIndexAdaptive(emb.filter(col("vec_id") < 10),
         emb, storedAnnIndex(s, dir, "ivfpq"), k = 5, maxProbe = 3)
         .orderBy("query_id", "rank")
-    }),
+    }, fixtures = Seq("ann" -> "ivfpq")),
 
     // The stop-shingle cost model as data: per df class, its posting
     // pair work and the running total against the budget — the table
     // autoMaxDf reads its cutoff from (replacing q23/q43/q151's magic
     // maxDf = 100 with a derived knee). DedupSpec pins that the tuned
     // cutoff reproduces the fixed-value pair population here.
-    "q212_maxdf_autotune" -> ((s, dir) =>
+    QuerySpec("q212_maxdf_autotune", (s, dir) =>
       Dedup.maxDfTuningTable(Tables.documents(s, dir), "doc_id", "text",
         n = 3, pairBudget = 10000000L).orderBy("df")),
 
@@ -831,7 +830,7 @@ private[graft] object SparkQueriesExt {
     // (the one convex curve the ×100 probe found). Same query path as
     // q28; the oracle derives the identical stride with a scalar
     // subquery.
-    "q213_ivf_fixed_cells" -> ((s, dir) => {
+    QuerySpec("q213_ivf_fixed_cells", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val stride = graft.operators.Clustering.strideForCells(
         emb, "vec_id", targetCells = 64)
@@ -851,7 +850,7 @@ private[graft] object SparkQueriesExt {
     // re-derives every stored artifact from the reference slice (the
     // q148/q169/q207 convention). PipelineSpec asserts the stored-
     // reference stage rows are ADDITIVE across batches.
-    "q214_incremental_pipeline" -> ((s, dir) => {
+    QuerySpec("q214_incremental_pipeline", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val batch = docs.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), col("lang"),
@@ -863,7 +862,7 @@ private[graft] object SparkQueriesExt {
         storedQualityModel(s, dir),
         storedBpeModel(s, dir))
         .orderBy("metric")
-    }),
+    }, fixtures = pipelineFixtures),
 
     // The LSH sizing derivation as data (the q212 pattern applied to
     // the last magic constants in the dedup family): per candidate
@@ -872,7 +871,7 @@ private[graft] object SparkQueriesExt {
     // canonical gate (t=0.5, s*=0.9, floor 1-1e-6) the chosen row IS
     // the historical 16x4 = 64-hash scheme — now computed, not carried
     // (DedupSpec pins it; every MinHash default reads from it).
-    "q215_lsh_sizing" -> ((s, dir) =>
+    QuerySpec("q215_lsh_sizing", (s, dir) =>
       Dedup.lshSizingTable(s).orderBy("rows_per_band")),
 
     // BM25 from the PERSISTED postings index (q185's stored twin —
@@ -882,13 +881,13 @@ private[graft] object SparkQueriesExt {
     // the query path tokenizes only the 10 query docs and pays
     // O(query-term postings). Bit-equal to the inline q185, so ONE
     // oracle adjudicates both paths.
-    "q216_bm25_stored" -> ((s, dir) => {
+    QuerySpec("q216_bm25_stored", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Retrieval.bm25TopKFromIndex(
         docs.filter(col("doc_id") < 10),
         storedDedupIndex(s, dir, "bm25"), "doc_id", "text", k = 5)
         .orderBy("query_id", "rank")
-    }),
+    }, fixtures = Seq("dedup" -> "bm25")),
 
     // Incremental SimHash dedup from PERSISTED reference state — the
     // third near-dup notion gets the q148/q149 lifecycle (MinHash:
@@ -897,13 +896,13 @@ private[graft] object SparkQueriesExt {
     // append odds of the reference slice), today's batch signed and
     // band-joined against the store. Oracle = the exhaustive cross
     // form of q25's twin (stored state must be bit-invisible).
-    "q217_simhash_stored" -> ((s, dir) => {
+    QuerySpec("q217_simhash_stored", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.simhashNearDupFromIndex(
         docs.filter(col("doc_id") % 3 =!= 0),
         storedDedupIndex(s, dir, "simhash"), "doc_id", "text")
         .orderBy("new_id", "ref_id")
-    }),
+    }, fixtures = Seq("dedup" -> "simhash")),
 
     // TIME TRAVEL over a stored index (the Delta/Iceberg VERSION AS OF
     // read, free under the manifest protocol because every kept
@@ -912,7 +911,7 @@ private[graft] object SparkQueriesExt {
     // build-evens state — answers "what would yesterday's index have
     // said?" for audits and reproductions. Oracle = the exhaustive
     // cross-Jaccard truth restricted to the ref subset version 1 held.
-    "q218_index_time_travel" -> ((s, dir) => {
+    QuerySpec("q218_index_time_travel", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val idx = storedDedupIndex(s, dir, "minhash")
       // Pin = the EARLIEST still-published version, not a hard-coded
@@ -927,7 +926,7 @@ private[graft] object SparkQueriesExt {
         "doc_id", "text", threshold = 0.5,
         atVersion = graft.engine.Manifests.earliestVersion(s, idx))
         .orderBy("new_id", "ref_id")
-    }),
+    }, fixtures = Seq("dedup" -> "minhash")),
 
     // COMMIT HISTORY of a stored index — the DESCRIBE HISTORY companion
     // to q218's VERSION AS OF: one row per (kept version, table) with
@@ -939,9 +938,9 @@ private[graft] object SparkQueriesExt {
     // of the reference third (1 param row, |evens| shingle-set rows,
     // 32·|evens| band rows), v2 "append" staged the odds and carried
     // params forward untouched.
-    "q219_index_history" -> ((s, dir) =>
+    QuerySpec("q219_index_history", (s, dir) =>
       graft.engine.Manifests.history(s, storedDedupIndex(s, dir, "minhash"))
-        .orderBy("version", "table")),
+        .orderBy("version", "table"), fixtures = Seq("dedup" -> "minhash")),
 
     // PIPELINE-LEVEL time travel (q218's VERSION AS OF lifted to the
     // whole daily loop): the q214 batch re-run with EVERY stored
@@ -953,7 +952,7 @@ private[graft] object SparkQueriesExt {
     // the live run reads — which is the point: the pin is a RESOLVED
     // version, not special-cased code. Oracle = the q214 chain with
     // the stored-reference predicate narrowed to the evens slice.
-    "q220_pipeline_as_of" -> ((s, dir) => {
+    QuerySpec("q220_pipeline_as_of", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val batch = docs.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), col("lang"),
@@ -971,7 +970,7 @@ private[graft] object SparkQueriesExt {
           qualityModel = graft.engine.Manifests.earliestVersion(s, qm),
           bpeModel = graft.engine.Manifests.earliestVersion(s, bpe)))
         .orderBy("metric")
-    }),
+    }, fixtures = pipelineFixtures),
 
     // ROLLBACK / RESTORE (Delta's RESTORE ... VERSION AS OF, zero-copy
     // under the manifest layout — the restore manifest lists the old
@@ -980,14 +979,14 @@ private[graft] object SparkQueriesExt {
     // answer with the build-evens state. The oracle is the evens-only
     // exhaustive truth — an un-restored live (evens+odds) answer
     // hash-mismatches, so the restore is adjudicated, not assumed.
-    "q221_index_rollback" -> ((s, dir) => {
+    QuerySpec("q221_index_rollback", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.minhashNearDupFromIndex(
         docs.filter(col("doc_id") % 3 =!= 0),
         storedDedupIndex(s, dir, "minhash_rb"),
         "doc_id", "text", threshold = 0.5)
         .orderBy("new_id", "ref_id")
-    }),
+    }, fixtures = Seq("dedup" -> "minhash_rb")),
 
     // CLONE / EXPORT (the lifecycle family's last verb: time travel
     // q218, history q219, restore q221, now branch-to-a-fresh-store):
@@ -996,14 +995,14 @@ private[graft] object SparkQueriesExt {
     // query reads the clone and must reproduce the source's full
     // truth set (q148's oracle), adjudicating the copied snapshot's
     // fidelity table by table.
-    "q222_index_clone" -> ((s, dir) => {
+    QuerySpec("q222_index_clone", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.minhashNearDupFromIndex(
         docs.filter(col("doc_id") % 3 =!= 0),
         storedDedupIndex(s, dir, "minhash_clone"),
         "doc_id", "text", threshold = 0.5)
         .orderBy("new_id", "ref_id")
-    }),
+    }, fixtures = Seq("dedup" -> "minhash_clone")),
 
     // PARTITIONED-postings BM25 (q216's 100 TB layout twin): the
     // stored postings nest under wb= term-bucket partition
@@ -1014,13 +1013,13 @@ private[graft] object SparkQueriesExt {
     // parameters as q216, SAME oracle: a layout that changed one
     // score or rank would hash-mismatch, adjudicating that
     // partitioning is answer-invisible.
-    "q223_bm25_partitioned" -> ((s, dir) => {
+    QuerySpec("q223_bm25_partitioned", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Retrieval.bm25TopKFromIndex(
         docs.filter(col("doc_id") < 10),
         storedDedupIndex(s, dir, "bm25p"), "doc_id", "text", k = 5)
         .orderBy("query_id", "rank")
-    }),
+    }, fixtures = Seq("dedup" -> "bm25p")),
 
     // VERSION AS OF on the streaming upsert table — the unification
     // dividend made queryable: the q123 MERGE sink now commits
@@ -1031,7 +1030,7 @@ private[graft] object SparkQueriesExt {
     // one IS the post-batch-1 state; oracle = newest-per-key over the
     // batch-1 slice alone (a live read — or a pin that leaked batch 2
     // — would carry the upper half's rows and hash-mismatch).
-    "q224_upsert_time_travel" -> ((s, dir) => {
+    QuerySpec("q224_upsert_time_travel", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value")
       val range = ev.agg(min(col("event_id")), max(col("event_id"))).head()
@@ -1054,7 +1053,7 @@ private[graft] object SparkQueriesExt {
     // is itself a manifest store: atomic commit AFTER the run's work,
     // so a crashed run is never resolvable. Same pins, same oracle as
     // q220: the evens-narrowed stored-reference chain.
-    "q225_run_ledger_replay" -> ((s, dir) => {
+    QuerySpec("q225_run_ledger_replay", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val batch = docs.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), col("lang"),
@@ -1068,7 +1067,7 @@ private[graft] object SparkQueriesExt {
         storedBpeModel(s, dir),
         asOf = graft.operators.Pipeline.asOfFromRun(s, ledger, "day1"))
         .orderBy("metric")
-    }),
+    }, fixtures = pipelineFixtures :+ ("runledger" -> "day1")),
 
     // CLONE LINEAGE (the audit tail of the lifecycle family): "where
     // did this exported index come from" as a queryable relation —
@@ -1080,12 +1079,12 @@ private[graft] object SparkQueriesExt {
     // provenance hash-mismatches. src_store is a scratch path
     // (machine-local), so the registered projection carries the
     // version columns the oracle can pin.
-    "q226_clone_lineage" -> ((s, dir) => {
+    QuerySpec("q226_clone_lineage", (s, dir) => {
       val idx = storedDedupIndex(s, dir, "minhash_clone")
       graft.engine.Manifests.lineage(s, idx)
         .select(col("version"), col("tag"), col("src_version"))
         .orderBy("version")
-    }),
+    }, fixtures = Seq("dedup" -> "minhash_clone")),
 
     // The partitioned-postings bucket derivation AS DATA (the q215
     // sizing-table shape applied to the new layout's one knob): the
@@ -1095,7 +1094,7 @@ private[graft] object SparkQueriesExt {
     // target is the TEST-SCALE target (it lands the sf0.01 corpus at
     // the q223 fixture's 8 buckets — the fixture constant IS this
     // derivation's value); production stores use the 256 MiB default.
-    "q227_bm25_bucket_sizing" -> ((s, dir) =>
+    QuerySpec("q227_bm25_bucket_sizing", (s, dir) =>
       Retrieval.bucketsSizingTable(Tables.documents(s, dir),
         "doc_id", "text", targetBucketBytes = 64L << 10))
   )

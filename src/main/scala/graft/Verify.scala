@@ -27,13 +27,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Self-adjudicating correctness artifact: the queries that carry
-    // no oracle BY CONTRACT, with the reason — so a `no_oracle` row in
-    // the driver's compare resolves here instead of in prose.
-    val exemptions = SparkEntry.oracleExemptions
-      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(
-      Paths.get(s"$outDir/oracle_exemptions.json"), exemptions)
     spark.stop()
   }
 }

@@ -292,20 +292,24 @@ object Manifests {
 
   /** True iff `t`'s cause chain is a missing-path read — the shapes a
     * concurrently GC-swept version surfaces as: a raw
-    * FileNotFoundException from the manifest open, or Spark's
+    * FileNotFoundException from the manifest open, Spark's
     * AnalysisException from a parquet read over the swept segment
     * (review finding: the parquet path does NOT throw
+    * FileNotFoundException), or the local filesystem's
+    * NoSuchFileException when the sweep lands mid-read (wrapped in
+    * SparkException [FAILED_READ_FILE.NO_HINT]; it is no
     * FileNotFoundException). The AnalysisException match keys on the
     * stable error CLASS first, with the current message substring AND
     * the pre-error-class phrasing ("Path does not exist") as
     * fallbacks — a Spark release rewording the message must not turn
     * "skip the swept version" into "crash mid-listing". */
-  private def isMissingPath(t: Throwable): Boolean = {
+  private[graft] def isMissingPath(t: Throwable): Boolean = {
     var c: Throwable = t
     var depth = 0
     while (c != null && depth < 10) {
       c match {
-        case _: java.io.FileNotFoundException => return true
+        case _: java.io.FileNotFoundException |
+            _: java.nio.file.NoSuchFileException => return true
         case a: org.apache.spark.sql.AnalysisException
             if a.getCondition == "PATH_NOT_FOUND" ||
               (a.getMessage != null &&
@@ -524,15 +528,32 @@ object Manifests {
     * manifest files, then any `seg*` directory no KEPT manifest
     * references (which also reclaims segments orphaned by crashed
     * commits). Swept by LISTING, so state orphaned mid-GC is reclaimed
-    * by the next commit instead of leaking. */
+    * by the next commit instead of leaking.
+    *
+    * The segment sweep is skipped while a rival commit is in flight:
+    * a claim above live, seen in the first listing or in a re-list
+    * taken after the markers are gone, or a kept manifest that a newer
+    * commit's GC deleted mid-read. That rival may be staging its own
+    * segment, or restoring the refs of a version this GC is retiring
+    * (a rollback resolves its source after claiming), and its own GC
+    * reclaims what this one leaves. */
   private def gc(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       keepVersions: Int): Unit = {
+    // List BEFORE resolving the published set: a segment in this
+    // listing is then either published by the time `kept` is read, or
+    // its writer's claim is in the listing too (a claim is created
+    // before staging and deleted only after the marker).
+    def listNames(): Seq[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+        .toSeq.map(_.getPath.getName)
+    def claims(ns: Seq[String]): Seq[Long] =
+      ns.filter(n => n.startsWith("CLAIM-") && digitsFitLong(n.drop(6)))
+        .map(_.drop(6).toLong)
+    val names = listNames()
     val published = publishedVersions(fs, dir)
     if (published.isEmpty) return
     val kept = published.takeRight(keepVersions)
     val keepFrom = kept.head
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .toSeq.map(_.getPath.getName)
     names.flatMap(parseMarkerVersion).filter(_ < keepFrom)
       .foreach(v => fs.delete(markerPath(dir, v), false))
     // Claims at or below the live version are PROVABLY stale — their
@@ -540,17 +561,24 @@ object Manifests {
     // was lost to a crash. Claims ABOVE live are never swept: that
     // writer may still be staging.
     val liveV = published.last
-    names.filter(n => n.startsWith("CLAIM-") && digitsFitLong(n.drop(6)))
-      .map(_.drop(6).toLong).filter(_ <= liveV)
-      .foreach(v => fs.delete(claimPath(dir, v), false))
+    val (staleClaims, openClaims) = claims(names).partition(_ <= liveV)
+    staleClaims.foreach(v => fs.delete(claimPath(dir, v), false))
     names.filter(n => n.startsWith("v") && digitsFitLong(n.drop(1)))
       .map(_.drop(1).toLong).filter(_ < keepFrom)
       .foreach(v => fs.delete(manifestPath(dir, v), false))
-    val referenced = kept.flatMap(v => readManifest(fs, dir, v).values.flatten)
-      .map(_.takeWhile(_ != '/')).toSet
-    names.filter(n => n.startsWith("seg") && digitsFitLong(n.drop(3)))
-      .filterNot(referenced.contains)
-      .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), true))
+    val referenced =
+      try Some(kept.flatMap(v => readManifest(fs, dir, v).values.flatten)
+        .map(_.takeWhile(_ != '/')).toSet)
+      catch { case _: java.io.FileNotFoundException => None }
+    // A claim taken after this re-list resolves its source after the
+    // retired markers are gone, so it can only re-reference kept
+    // segments.
+    val rivalInFlight = openClaims.nonEmpty || referenced.isEmpty ||
+      claims(listNames()).exists(_ > liveV)
+    if (!rivalInFlight)
+      names.filter(n => n.startsWith("seg") && digitsFitLong(n.drop(3)))
+        .filterNot(referenced.get.contains)
+        .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), true))
   }
 
   /** `dir`-relative ref of `table` inside version `v`'s segment — what
@@ -576,9 +604,10 @@ object Manifests {
     // refs a racing keepVersions=1 commit's GC swept in between
     // (dangling live refs, the one corruption mode the concurrency
     // stress's completeness invariant names; review finding). After
-    // the claim + staleness re-list, no rival commit (and so no GC)
-    // can run until this commit releases, so refs resolved there are
-    // stable by construction.
+    // the claim + staleness re-list, no rival commit can run until
+    // this commit releases, and a predecessor's GC still running skips
+    // its segment sweep while this claim is open (see [[gc]]), so refs
+    // resolved there are stable by construction.
     def resolveOrRefuse(): Snapshot = snapshotAt(spark, dir, v).getOrElse(
       throw new IllegalArgumentException(
         s"cannot restore $dir to version $v — never built, or aged " +
@@ -762,7 +791,13 @@ object Manifests {
           (v, tag, t, refs.size.toLong, own.size.toLong, newRows)
         }
       } catch {
-        case t if isMissingPath(t) =>
+        // GC deletes a version's marker strictly before its segment, so
+        // any read failure once `v` is unpublished is the sweep — also
+        // the shapes that are not a missing path, like the
+        // UNABLE_TO_INFER_SCHEMA of a segment deleted during Spark's
+        // file listing.
+        case t if isMissingPath(t) || (scala.util.control.NonFatal(t) &&
+            !publishedVersions(fs, dir).contains(v)) =>
           Seq.empty[(Long, String, String, Long, Long, Long)]
       }
     }

@@ -123,20 +123,17 @@ object Pipeline {
     * the residual between the bench wall and this table's sum.
     *
     * DIAGNOSTIC channel (the [[Dedup.lastClusterRounds]] precedent):
-    * read after a run by [[stageTimingReport]] and the bench telemetry
+    * taken after every query by the bench and scale-probe telemetry
     * (stderr + BENCH_PARTIAL.jsonl). Deliberately NOT part of the
-    * oracled q209/q214 report — wall time is not oracle-able, and a
+    * oracled pipeline reports — wall time is not oracle-able, and a
     * row of it would break the hash gate; CORRECTNESS stays on the
-    * value columns. Meaningless under concurrent callers. */
-  @volatile private var lastTimings: Seq[(String, Double)] = Nil
-  def lastStageSeconds: Seq[(String, Double)] = lastTimings
-
-  /** The last run's (stage, seconds) as a DataFrame, for callers that
-    * want the timing table beside the report. */
-  def stageTimingReport(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import spark.implicits._
-    lastTimings.toDF("stage", "seconds")
-  }
+    * value columns. Meaningless under concurrent callers.
+    *
+    * Take-and-clear: a second take returns empty, so a read after a
+    * query that ran no pipeline never reports an earlier run's stages. */
+  private val lastTimings =
+    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
+  def takeStageSeconds(): Seq[(String, Double)] = lastTimings.getAndSet(Nil)
 
   /** Stage wall clock around a lazy staged frame or a
     * [[Caches.truncated]] stage, whose barrier count the report reuses
@@ -155,7 +152,7 @@ object Pipeline {
   private def timeStages[A](body: StageTimer => A): A = {
     val timer = new StageTimer
     val out = body(timer)
-    lastTimings = timer.acc.toList
+    lastTimings.set(timer.acc.toList)
     out
   }
 

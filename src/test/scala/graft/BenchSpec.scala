@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry-consistency guards for the bench harness: the tier map and
-  * the oracle map are hand-kept beside `SparkEntry.queries`, and both
-  * have drifted silently before (q115/q116 were appended to the ingest
-  * set by hand). Pure bookkeeping assertions — no SparkSession. */
+/** Registry-consistency guards for the bench harness: tiers and
+  * fixtures live on the `QuerySpec` records, but the oracle map is kept
+  * beside them in `SparkOracles`, and the registry order is part of the
+  * bench ledger context. Pure bookkeeping assertions — no SparkSession. */
 class BenchSpec extends AnyFunSuite {
 
   private val names = SparkEntry.queries.keySet
@@ -14,17 +14,9 @@ class BenchSpec extends AnyFunSuite {
     names.foreach { n =>
       assert(Bench.queryNum(n) > 0,
         s"query '$n' does not follow the qNN_ naming convention — " +
-          "tierOf would silently bucket it by the -1 fallback")
+          "the compact bench summary keys queries by that number")
       assert(Set("core", "ingest_sink", "extension")(Bench.tierOf(n)))
     }
-  }
-
-  test("every ingest_sink tier member names a registered query") {
-    val registered = names.map(Bench.queryNum)
-    val stale = Bench.ingestSinkNums.diff(registered)
-    assert(stale.isEmpty,
-      s"ingest_sink tier carries unregistered query numbers: $stale — " +
-        "remove them or register the queries")
   }
 
   test("query numbers are unique (the compact bench keys depend on it)") {
@@ -40,25 +32,21 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("every query has an oracle OR a documented exemption — never silence") {
+    // The exemption list is retired (it stood empty since every query
+    // gained an oracle), so "documented exemption" is the empty set:
+    // every registered query must carry oracle SQL.
     val unoracled = names.diff(SparkEntry.oracleSql.keySet)
-    assert(unoracled == SparkEntry.oracleExemptions.keySet,
-      s"queries without oracle must exactly match the exemption list; " +
-        s"missing oracle: ${unoracled.diff(SparkEntry.oracleExemptions.keySet)}, " +
-        s"stale exemption: ${SparkEntry.oracleExemptions.keySet.diff(unoracled)}")
+    assert(unoracled.isEmpty, s"queries without an oracle: $unoracled")
   }
 
   test("registry split invariants: no duplicate keys, segment order preserved") {
-    // queries is ListMap(core ++ ext): a key registered in BOTH
-    // segments would be silently deduplicated by the ListMap (last
-    // wins) AND shift every later query's bench position — fail loudly
-    // instead.
-    val keys = SparkEntry.queries.keys.toSeq
-    val extKeys = SparkQueriesExt.entries.map(_._1)
-    assert(extKeys.distinct.size == extKeys.size,
-      "duplicate key inside the ext segment")
-    assert(keys.size == keys.distinct.size) // ListMap makes this a no-op check
-    assert(SparkEntry.queries.size ==
-      keys.size && extKeys.forall(SparkEntry.queries.contains))
+    // queries is a ListMap over the specs: a name registered twice
+    // would be silently deduplicated by the ListMap (last wins) AND
+    // shift every later query's bench position — fail loudly instead.
+    val keys = SparkEntry.specs.map(_.name)
+    val extKeys = SparkQueriesExt.specs.map(_.name)
+    assert(keys.distinct == keys, "duplicate query name in the registry")
+    assert(SparkEntry.queries.keys.toSeq == keys)
     // Order contract: the ext segment is APPENDED after the core one,
     // exactly the pre-split registration order (bench reads queries in
     // map order; per-query ledger context depends on it). Pin the
@@ -66,18 +54,10 @@ class BenchSpec extends AnyFunSuite {
     val coreCount = keys.size - extKeys.size
     assert(keys.drop(coreCount) == extKeys,
       "ext segment must be the map's tail, in its own registration order")
-    assert(keys.take(coreCount).toSet.intersect(extKeys.toSet).isEmpty)
     // The historical boundary: q86 closes the core segment, q148 opens
     // the ext segment (the pre-split adjacency).
     assert(keys(coreCount - 1) == "q86_incremental_agg" &&
       keys(coreCount) == "q148_minhash_stored_dedup")
-  }
-
-  test("every fixture-backed query names a registered query") {
-    // Bench gates its untimed warm step on this set; a stale member
-    // would silently stop warming (timed queries would pay the build).
-    val stale = SparkEntry.fixtureQueries.diff(names)
-    assert(stale.isEmpty, s"fixtureQueries with no query: $stale")
   }
 
   test("stdout summary stays under 1.5 KB with 300 queries all flagged and erroring") {
@@ -121,17 +101,17 @@ class BenchSpec extends AnyFunSuite {
     // q05 is core (first 6 → retime 2: delta −4), q23 is extension
     // (first 8 → retime 3: delta −5); totals and tiers move together.
     val (t1, ts1) = Bench.adjusted(30.0, tiers,
-      Seq(flag("q05_x", 6.0, 2.0), flag("q23_y", 8.0, 3.0)))
+      Seq(flag("q05_ranking", 6.0, 2.0), flag("q23_ngram_jaccard", 8.0, 3.0)))
     assert(math.abs(t1 - 21.0) < 1e-9)
     val m1 = ts1.toMap
     assert(m1("core") == 6.0 && m1("extension") == 15.0)
     // A failed retime (sec = -1) must keep the first-run wall.
-    val (t2, ts2) = Bench.adjusted(30.0, tiers, Seq(flag("q05_x", 6.0, -1.0)))
+    val (t2, ts2) = Bench.adjusted(30.0, tiers, Seq(flag("q05_ranking", 6.0, -1.0)))
     assert(t2 == 30.0 && ts2 == tiers)
     // A flag whose tier is absent from the input appends it (raw 0),
     // preserving adjusted_total == sum(adjusted_tiers).
     val (t3, ts3) = Bench.adjusted(30.0, Seq("core" -> 10.0),
-      Seq(flag("q23_y", 8.0, 3.0)))
+      Seq(flag("q23_ngram_jaccard", 8.0, 3.0)))
     assert(math.abs(t3 - 25.0) < 1e-9)
     assert(ts3.toMap.get("extension").contains(-5.0))
     assert(math.abs(ts3.map(_._2).sum - (10.0 - 5.0)) < 1e-9)

@@ -1,25 +1,30 @@
 package graft
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Dev-only parameterized timing/plan probe (test sourceset, never
-  * shipped). One main, four modes, each over any registered queries:
+  * shipped). One main, seven modes, each over any registered queries:
   *
   *   sbt 'Test/runMain graft.DevProbe wall q23_ngram_jaccard,q43_prefix_jaccard'
   *     per-query wall + GC + JIT attribution (is a slow run compute or
   *     JVM ramp?)
-  *   sbt 'Test/runMain graft.DevProbe stages q24_minhash_pairs'
-  *     top stages by duration with task counts and exec/cpu/gc time
-  *     (which exchange or scan carries the cost?)
   *   sbt 'Test/runMain graft.DevProbe warm q28_ivf_topk'
   *     three timed same-JVM runs (cold-vs-warm delta = JIT/codegen ramp,
   *     not plan cost)
+  *   sbt 'Test/runMain graft.DevProbe stages q24_minhash_pairs'
+  *     top stages by duration with task counts and exec/cpu/gc time
+  *     (which exchange or scan carries the cost?)
   *   sbt 'Test/runMain graft.DevProbe plan q43_prefix_jaccard'
   *     formatted executed plan after one run (AQE-final, not initial)
+  *   sbt 'Test/runMain graft.DevProbe jobs q209_full_pipeline'
+  *     job, stage and task counts of the timed body
+  *   sbt 'Test/runMain graft.DevProbe jobtrace q209_full_pipeline'
+  *     one line per job with its call site and duration
+  *   sbt 'Test/runMain graft.DevProbe explain q43_prefix_jaccard'
+  *     formatted initial plan, then the AQE-final plan after one run
   *
   * Defaults to the historically flag-prone queries when none are given.
   * Replaces the five per-investigation DevProbe mains from rounds 5–8;
@@ -74,54 +79,24 @@ object DevProbe {
         }
 
       case "stages" =>
-        // Appended from the listener-bus thread, read from main:
-        // synchronized, and read only after the buffer holds still (a
-        // stability poll — waitUntilEmpty is private[spark]). A plain
-        // fixed sleep can miss the heaviest stage on a loaded host,
-        // exactly the case the probe exists to diagnose; the poll can
-        // too if the bus stalls >500 ms between events, but bounded by
-        // the 30 s cap it is the best public-API approximation.
-        val stages =
-          mutable.ArrayBuffer[(Int, String, Long, Int, Long, Long, Long)]()
-        val stageListener = new SparkListener {
-          override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
+        names.foreach { name =>
+          val (wall, events) = SparkEvents.during(spark.sparkContext)(timed(name))
+          println(f"[probe] ==== $name wall=$wall%7.2f s ====")
+          val stages = events.collect { case e: SparkListenerStageCompleted =>
+            val si = e.stageInfo
             val dur = (for {
               s <- si.submissionTime; c <- si.completionTime
             } yield c - s).getOrElse(-1L)
-            stages.synchronized {
-              stages += ((si.stageId, si.name.split("\n").head.take(60),
-                dur, si.numTasks, si.taskMetrics.executorRunTime,
-                si.taskMetrics.executorCpuTime / 1000000,
-                si.taskMetrics.jvmGCTime))
-            }
+            (si, dur)
+          }
+          stages.sortBy(-_._2).take(8).foreach { case (si, dur) =>
+            val m = si.taskMetrics
+            println(f"[probe]   stage ${si.stageId}%4d dur=${dur / 1000.0}%8.2f s " +
+              f"tasks=${si.numTasks}%3d execRun=${m.executorRunTime / 1000.0}%8.2f s " +
+              f"cpu=${m.executorCpuTime / 1e9}%8.2f s gc=${m.jvmGCTime / 1000.0}%6.2f s  " +
+              si.name.split("\n").head.take(60))
           }
         }
-        spark.sparkContext.addSparkListener(stageListener)
-        // The listener bus is private[spark]; drain by polling the
-        // buffer until it holds still for 500 ms (30 s cap).
-        def drained(): Unit = {
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          var last = -1
-          var stable = 0
-          while (stable < 5 && System.nanoTime() < deadline) {
-            Thread.sleep(100)
-            val n = stages.synchronized(stages.size)
-            if (n == last) stable += 1 else { stable = 0; last = n }
-          }
-        }
-        try names.foreach { name =>
-          val wall = timed(name)
-          drained()
-          println(f"[probe] ==== $name wall=$wall%7.2f s ====")
-          stages.synchronized(stages.sortBy(-_._3).take(8)).foreach {
-            case (id, n2, dur, nt, run, cpu, gc) =>
-              println(f"[probe]   stage $id%4d dur=${dur / 1000.0}%8.2f s " +
-                f"tasks=$nt%3d execRun=${run / 1000.0}%8.2f s " +
-                f"cpu=${cpu / 1000.0}%8.2f s gc=${gc / 1000.0}%6.2f s  $n2")
-          }
-          stages.synchronized(stages.clear())
-        } finally spark.sparkContext.removeSparkListener(stageListener)
 
       case "plan" =>
         names.foreach { name =>
@@ -136,83 +111,34 @@ object DevProbe {
       // Job/stage/task counts in the timed body — the evidence for
       // "this change removed sequential jobs" (the r18 verdict's ask on
       // the barrier-bound pipeline family, where wall is job-count-
-      // bound: 8c/32c ≈ 1). Jobs counted from onJobStart on the
-      // listener bus, drained with the same stability poll as `stages`.
+      // bound: 8c/32c ≈ 1).
       case "jobs" =>
-        val jobs = mutable.ArrayBuffer[(Int, Int)]() // (jobId, nStages)
-        val taskCount = new java.util.concurrent.atomic.AtomicLong(0)
-        val jobListener = new SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.synchronized { jobs += ((js.jobId, js.stageInfos.size)) }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            taskCount.incrementAndGet()
-        }
-        spark.sparkContext.addSparkListener(jobListener)
-        def jobsDrained(): Unit = {
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          var last = -1L
-          var stable = 0
-          while (stable < 5 && System.nanoTime() < deadline) {
-            Thread.sleep(100)
-            val n = jobs.synchronized(jobs.size.toLong) + taskCount.get()
-            if (n == last) stable += 1 else { stable = 0; last = n }
-          }
-        }
-        try names.foreach { name =>
-          jobsDrained()
-          jobs.synchronized(jobs.clear()); taskCount.set(0)
-          val wall = timed(name)
-          jobsDrained()
-          val (nJobs, nStages) = jobs.synchronized(
-            (jobs.size, jobs.map(_._2).sum))
+        names.foreach { name =>
+          val (wall, events) = SparkEvents.during(spark.sparkContext)(timed(name))
+          val jobs = events.collect { case js: SparkListenerJobStart => js }
+          val tasks = events.count(_.isInstanceOf[SparkListenerTaskEnd])
           println(f"[probe] $name%-26s wall=$wall%7.2f s " +
-            f"jobs=$nJobs%4d stages=$nStages%4d tasks=${taskCount.get()}%5d")
-        } finally spark.sparkContext.removeSparkListener(jobListener)
+            f"jobs=${jobs.size}%4d stages=${jobs.map(_.stageInfos.size).sum}%4d " +
+            f"tasks=$tasks%5d")
+        }
 
       // Per-job trace: one line per job with its callSite and timing —
       // answers WHICH driver actions a 100-job query body is made of.
       case "jobtrace" =>
-        val trace = mutable.ArrayBuffer[(Int, Long, String)]()
-        val ends = mutable.Map[Int, Long]()
-        val traceListener = new SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        names.foreach { name =>
+          val (wall, events) = SparkEvents.during(spark.sparkContext)(timed(name))
+          println(f"[probe] ==== $name wall=$wall%7.2f s ====")
+          val ends = events.collect { case je: SparkListenerJobEnd => je.jobId -> je.time }.toMap
+          events.collect { case js: SparkListenerJobStart => js }.sortBy(_.time).foreach { js =>
             val site = Option(js.properties)
               .flatMap(p => Option(p.getProperty("callSite.short")))
               .getOrElse(js.stageInfos.headOption.map(_.name.split("\n").head)
                 .getOrElse("?"))
-            trace.synchronized { trace += ((js.jobId, js.time, site.take(90))) }
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            ends.synchronized { ends(je.jobId) = je.time }
-        }
-        spark.sparkContext.addSparkListener(traceListener)
-        def traceDrained(): Unit = {
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          var last = -1
-          var stable = 0
-          while (stable < 5 && System.nanoTime() < deadline) {
-            Thread.sleep(100)
-            val n = trace.synchronized(trace.size)
-            if (n == last) stable += 1 else { stable = 0; last = n }
+            val dur = ends.get(js.jobId)
+              .map(t1 => f"${(t1 - js.time) / 1000.0}%7.2f s").getOrElse("  (open)")
+            println(f"[probe]   job ${js.jobId}%4d $dur  ${site.take(90)}")
           }
         }
-        try names.foreach { name =>
-          traceDrained()
-          trace.synchronized(trace.clear()); ends.synchronized(ends.clear())
-          val wall = timed(name)
-          traceDrained()
-          println(f"[probe] ==== $name wall=$wall%7.2f s ====")
-          val t = trace.synchronized(trace.toList)
-          t.sortBy(_._2).foreach { case (id, t0, site) =>
-            val dur = ends.synchronized(ends.get(id))
-              .map(t1 => f"${(t1 - t0) / 1000.0}%7.2f s").getOrElse("  (open)")
-            println(f"[probe]   job $id%4d $dur  $site")
-          }
-        } finally spark.sparkContext.removeSparkListener(traceListener)
 
       // `.explain("formatted")` capture for the round's plan-evidence
       // files (plans/rNN/<query>_{before,after}.txt): the formatted
@@ -233,7 +159,8 @@ object DevProbe {
         }
 
       case other =>
-        sys.error(s"unknown probe mode '$other' (wall|warm|stages|plan|explain)")
+        sys.error(s"unknown probe mode '$other' " +
+          "(wall|warm|stages|plan|jobs|jobtrace|explain)")
     }
     spark.stop()
   }

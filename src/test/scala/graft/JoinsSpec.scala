@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerStageCompleted
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,17 +46,9 @@ class JoinsSpec extends SparkSpec {
     // future compression-codec or Spark-version change could shrink
     // the hot partition below the 32KB skew threshold and flip the
     // assertion to flaky. Capture the join's actual shuffle-write
-    // bytes via a listener and `assume` the regime holds — an
-    // environmental shift then reads as a canceled precondition
-    // naming the measured bytes, not a spurious failure.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // bytes from its stages' completions and `assume` the regime
+    // holds — an environmental shift then reads as a canceled
+    // precondition naming the measured bytes, not a spurious failure.
     try {
       // Fatter, INCOMPRESSIBLE payload (shuffle blocks are compressed;
       // 5000 identical pads would deflate below any threshold).
@@ -67,28 +60,21 @@ class JoinsSpec extends SparkSpec {
       val df = left.join(build, "okey")
       // collect() on THIS frame so its AdaptiveSparkPlan finalizes
       // (count() would execute a separate QueryExecution).
-      assert(df.collect().length == (5000 + 100 * 10) * 2)
-      // Listener events land on the bus thread: poll until the byte
-      // counter holds still (bounded), then check the precondition.
+      val (n, events) = SparkEvents.during(spark.sparkContext)(df.collect().length)
+      assert(n == (5000 + 100 * 10) * 2)
       // The hot key owns ~5000/6000 of the probe side's bytes, so
       // "total written >= 6x the 32KB skew threshold" guarantees the
       // hot partition sits comfortably above it.
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var last = -1L; var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val b = shuffleBytes.get()
-        if (b == last) stable += 1 else { stable = 0; last = b }
-      }
-      assume(shuffleBytes.get() >= 6L * 32 * 1024,
-        s"compressed shuffle blocks measured ${shuffleBytes.get()} bytes — " +
+      val shuffleBytes = events.collect { case s: SparkListenerStageCompleted =>
+        s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten }.sum
+      assume(shuffleBytes >= 6L * 32 * 1024,
+        s"compressed shuffle blocks measured $shuffleBytes bytes — " +
           "below the regime the 32KB skew threshold was tuned for " +
           "(codec/version shift); retune the thresholds, don't chase flakes")
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"expected AQE skew-join split (skew=true) in:\n$plan")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

@@ -301,6 +301,48 @@ class ManifestsSpec extends SparkSpec {
     assert(Manifests.liveVersion(spark, dir).contains(1L))
   }
 
+  test("GC spares the segment an open claim above live is still staging") {
+    val dir = s"${graft.engine.Sinks.scratch}/manifests_gc_open_claim"
+    IncrementalIngest.deleteDir(spark, dir)
+    val fs = fsOf(dir)
+    def commit(): Long = Manifests.publish(spark, dir, keepVersions = 1) { (v, seg, _) =>
+      writeRows(s"$seg/t", v)
+      Map("t" -> Seq(Manifests.ref(v, "t")))
+    }
+    commit()
+    // What a committer's GC lists when a rival has claimed the next
+    // version and begun staging it: the claim and its unreferenced segment.
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/CLAIM-00000003"), false).close()
+    writeRows(s"${Manifests.segDir(dir, 3L)}/t", 3L)
+    assert(commit() == 2L)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(Manifests.segDir(dir, 3L))),
+      "GC swept a segment its claimer is still staging")
+  }
+
+  test("GC defers the segment sweep while a rival claim is open, then reclaims") {
+    val dir = s"${graft.engine.Sinks.scratch}/manifests_gc_deferred"
+    IncrementalIngest.deleteDir(spark, dir)
+    val fs = fsOf(dir)
+    def commit(): Long = Manifests.publish(spark, dir, keepVersions = 1) { (v, seg, _) =>
+      writeRows(s"$seg/t", v)
+      Map("t" -> Seq(Manifests.ref(v, "t")))
+    }
+    def seg(v: Long) = new org.apache.hadoop.fs.Path(Manifests.segDir(dir, v))
+    commit()
+    // A rival that claimed version 3 may be a rollback restoring
+    // version 1's refs: version 1 retires at commit 2, but its segment
+    // must outlive the open claim.
+    val claim = new org.apache.hadoop.fs.Path(s"$dir/CLAIM-00000003")
+    fs.create(claim, false).close()
+    assert(commit() == 2L)
+    assert(fs.exists(seg(1L)), "GC swept a retired segment under an open rival claim")
+    assert(Manifests.earliestVersion(spark, dir).contains(2L))
+    // The rival gives up; the next commit's GC reclaims the leftover.
+    fs.delete(claim, false)
+    assert(commit() == 3L)
+    assert(!fs.exists(seg(1L)) && !fs.exists(seg(2L)) && fs.exists(seg(3L)))
+  }
+
   test("retention pin + earliest-version resolution: the q218 contract survives a 3-commit store") {
     val dir = s"${graft.engine.Sinks.scratch}/manifests_retention"
     IncrementalIngest.deleteDir(spark, dir)
@@ -598,5 +640,17 @@ class ManifestsSpec extends SparkSpec {
       .select("version").distinct().collect().map(_.getLong(0)).toSet
     assert(versions == Set(2L, 3L),
       s"GC'd versions must leave the history: $versions")
+  }
+
+  test("history: a segment swept mid-read (NoSuchFileException under FAILED_READ_FILE) counts as missing") {
+    // The shape a concurrent GC raises when it deletes a segment's .crc
+    // sidecar during parquet's read: the local filesystem's
+    // NoSuchFileException, wrapped by the scan.
+    val swept = new org.apache.spark.SparkException(
+      "[FAILED_READ_FILE.NO_HINT] Encountered error while reading file " +
+        "file:/scratch/idx/seg-0001.parquet. SQLSTATE: KD001",
+      new java.nio.file.NoSuchFileException("/scratch/idx/.seg-0001.parquet.crc"))
+    assert(Manifests.isMissingPath(swept))
+    assert(!Manifests.isMissingPath(new org.apache.spark.SparkException("boom")))
   }
 }

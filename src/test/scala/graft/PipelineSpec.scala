@@ -100,13 +100,14 @@ class PipelineSpec extends SparkSpec {
     // Stage-timing telemetry: the last run left one wall clock per
     // stage, in stage order (the diagnostic channel bench reads — NOT
     // rows of the oracled report, which stays hash-comparable).
-    val stages = Pipeline.lastStageSeconds
+    val stages = Pipeline.takeStageSeconds()
     assert(stages.map(_._1) == Seq("1_line_cleanse", "2_extract_gate",
       "3_survivors", "4_history_dedup", "5_novel", "6_classify",
       "7_classifier_keep", "8_bpe_price", "9_budget", "10_final_select",
       "11_pack"), s"unexpected stage set: $stages")
     assert(stages.forall(_._2 >= 0.0))
-    assert(Pipeline.stageTimingReport(spark).count() == stages.size)
+    // Take-and-clear: a later query that runs no pipeline reads nothing.
+    assert(Pipeline.takeStageSeconds().isEmpty)
   }
 
   test("pipeline time travel: a version-pinned re-run after appends to all four stores is bit-equal") {

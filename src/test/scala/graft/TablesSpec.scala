@@ -2,14 +2,12 @@ package graft
 
 import java.sql.Timestamp
 import java.time.LocalDateTime
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType,
   TimestampNTZType, TimestampType}
@@ -74,39 +72,10 @@ class TablesSpec extends SparkSpec {
     assert(out.count() == 100)
   }
 
-  /** Spark jobs `body` starts on this thread, counted by a listener keyed
-    * on a job tag. The bus delivers events in order, so once a tagged
-    * sentinel job's start arrives, every job `body` started has been seen. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        if (props.flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) {
-          if (props.exists(_.getProperty("tables-spec.sentinel") == "1"))
-            drained.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      body
-      sc.setLocalProperty("tables-spec.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("tables-spec.sentinel", null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get()
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs `body` starts on this thread. */
+  private def jobsStartedBy(body: => Unit): Int =
+    SparkEvents.during(spark.sparkContext)(body)._2
+      .count(_.isInstanceOf[SparkListenerJobStart])
 
   test("a repeated load reuses the inferred schema and starts no Spark job") {
     val first = Tables.lineitem(spark, sf).schema
