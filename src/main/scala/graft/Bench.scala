@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, writes the full per-query record to
   * `BENCH_FULL_c<cpus>.json` (canonical, pointed at by the stdout
@@ -91,9 +94,112 @@ object Bench {
     * identifies a contention storm from the artifact alone. (This
     * host's "steal" is co-tenant containers, which /proc/stat shows
     * as user/system busy, not the hypervisor `steal` field — busy%
-    * includes both.) */
+    * includes both.) `stages` holds the pipeline stage walls the run
+    * left (see [[measure]]), empty for a query that runs no pipeline. */
   final case class RunStats(sec: Double, cpuS: Double, gcS: Double,
-      jitS: Double, ccMb: Double, busyPct: Double, err: Option[String])
+      jitS: Double, ccMb: Double, busyPct: Double, err: Option[String],
+      stages: Seq[(String, Double)] = Nil)
+
+  import scala.jdk.CollectionConverters._
+  import java.lang.management.{ManagementFactory => mf}
+
+  private def gcMillis: Long =
+    mf.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+  // Process-wide CPU nanos (all threads) — the steal-attribution
+  // counter; -1 when the platform bean is not the HotSpot one.
+  private def cpuNanos: Long = mf.getOperatingSystemMXBean match {
+    case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
+    case _ => -1L
+  }
+  // Cumulative JIT-compilation ms and code-cache occupancy (MB) — the
+  // counters that explain the positional mode where a late-suite query
+  // burns CPU compiling instead of executing (r10 q121).
+  private def jitMillis: Long = mf.getCompilationMXBean.getTotalCompilationTime
+  private def codeHeaps = mf.getMemoryPoolMXBeans.asScala
+    .filter(_.getName.startsWith("CodeHeap"))
+  private def codeCacheMb: Double =
+    codeHeaps.map(_.getUsage.getUsed.toDouble / 1024 / 1024).sum
+  // HOST-level (busy, total) jiffies from /proc/stat line 1 — every
+  // tenant of the box, not just this process. busy = total − idle −
+  // iowait (includes the hypervisor steal field AND co-tenant
+  // user/system time, which is what "steal" actually is on this
+  // oversubscribed host). Only the first 8 fields count: the kernel
+  // already folds guest/guest_nice into user/nice, so summing fields
+  // 9–10 would double-count guest CPU and inflate busy%. (−1, −1)
+  // when unreadable (non-Linux).
+  private def hostCpu(): (Long, Long) =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val line = try src.getLines().next() finally src.close()
+      val f = line.trim.split("\\s+").drop(1).take(8).map(_.toLong)
+      val idle = f(3) + (if (f.length > 4) f(4) else 0L)
+      (f.sum - idle, f.sum)
+    } catch { case _: Throwable => (-1L, -1L) }
+
+  /** Per-query JVM vitals for stderr (stdout stays one parseable JSON
+    * line): code-cache occupancy, cumulative JIT + GC time, loaded-class
+    * count — the counters that explain positional slowdowns (a query
+    * running 10x slower mid-suite than in isolation is a JIT/GC
+    * symptom, not a plan property). */
+  private def vitals(): String = {
+    val code = codeHeaps
+      .map(p => s"${p.getName.stripPrefix("CodeHeap '").stripSuffix("'")}=" +
+        s"${p.getUsage.getUsed / 1024 / 1024}M")
+      .mkString(" ")
+    val cls = mf.getClassLoadingMXBean.getLoadedClassCount
+    s"$code jit=${jitMillis}ms gc=${gcMillis}ms classes=$cls"
+  }
+
+  /** The one measured query run, shared by every main: build the frame,
+    * run `act` on it (a `count()` unless the caller writes or prints),
+    * take the pipeline stage seconds it left
+    * ([[graft.operators.Pipeline.takeStageSeconds]]), then release every
+    * operator cache and the catalog cache so the next run is cold. Wall
+    * time includes the release. The build is a thunk so that a failing
+    * build takes the same path as a failing action: the run is VISIBLY
+    * broken (`sec = -1` and `err` set), never a plausible wall, and its
+    * caches are still released. */
+  def measure(spark: SparkSession)(build: => DataFrame)(
+      act: DataFrame => Unit = _.count()): RunStats = {
+    val t0 = System.nanoTime(); val c0 = cpuNanos; val g0 = gcMillis
+    val j0 = jitMillis; val cc0 = codeCacheMb; val h0 = hostCpu()
+    val err = try { act(build); None }
+      catch { case t: Throwable => Some(t.toString) }
+    val stages = graft.operators.Pipeline.takeStageSeconds()
+    graft.engine.Caches.release()
+    spark.catalog.clearCache()
+    val h1 = hostCpu()
+    val sec = if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
+    val cpu = if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9
+    val busy = if (h0._2 < 0 || h1._2 <= h0._2) -1.0
+      else 100.0 * (h1._1 - h0._1) / (h1._2 - h0._2)
+    RunStats(sec, cpu, (gcMillis - g0) / 1e3, (jitMillis - j0) / 1e3,
+      codeCacheMb - cc0, busy, err, stages)
+  }
+
+  /** Untimed fixture warm-up, shared by the mains: builds the stored
+    * fixtures (media payloads, persisted indexes and models) that the
+    * fixture queries among `names` read from `dir`, outside every timed
+    * window — plumbing a real corpus never pays per query. A no-op when
+    * `names` selects no fixture query, so a dev loop timing one
+    * unrelated query does not pay index trainings first. Logs the wall
+    * and any failure under `[tag]`, and returns the failure. */
+  def warmFixtures(spark: SparkSession, dir: String, names: Iterable[String],
+      tag: String): Option[Throwable] = {
+    val selected = names.toSet.filter(SparkEntry.fixtureQueries)
+    if (selected.isEmpty) None
+    else {
+      val t0 = System.nanoTime()
+      val err = try { SparkEntry.warmFixtures(spark, dir, selected); None }
+        catch { case t: Throwable => Some(t) }
+      graft.engine.Caches.release()
+      spark.catalog.clearCache()
+      err.foreach(t => System.err.println(s"[$tag] warmFixtures($dir) FAILED: $t"))
+      System.err.println(f"[$tag] warmFixtures($dir) " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2f s (untimed)")
+      err
+    }
+  }
 
   /** A flagged query: first run + same-JVM retime, both with vitals. */
   final case class Flag(name: String, median: Double, first: RunStats,
@@ -117,6 +223,11 @@ object Bench {
     * turn the one parseable stdout JSON line into garbage. */
   private[graft] def n2(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** `{"stage":seconds,…}` for a run's pipeline stage walls. */
+  private[graft] def stageJson(stages: Seq[(String, Double)]): String =
+    stages.map { case (s, sec) => jstr(s) + ":" + n2(sec) }
+      .mkString("{", ",", "}")
 
   /** Hard caps that bound the stdout line regardless of suite size:
     * the flagged map keeps the WORST `MaxFlagged` entries (by first-run
@@ -244,73 +355,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val baseline = loadBaseline(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json"))
-    import scala.jdk.CollectionConverters._
-    import java.lang.management.{ManagementFactory => mf}
-    def gcMillis: Long =
-      mf.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    // Process-wide CPU nanos (all threads) — the steal-attribution
-    // counter; -1 when the platform bean is not the HotSpot one.
-    def cpuNanos: Long = mf.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-    // Per-query JVM vitals on stderr (stdout stays one parseable JSON
-    // line): code-cache occupancy, cumulative JIT + GC time, loaded-class
-    // count — the counters that explain positional slowdowns (a query
-    // running 10x slower mid-suite than in isolation is a JIT/GC symptom,
-    // not a plan property).
-    def vitals(): String = {
-      val code = mf.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.startsWith("CodeHeap"))
-        .map(p => s"${p.getName.stripPrefix("CodeHeap '").stripSuffix("'")}=" +
-          s"${p.getUsage.getUsed / 1024 / 1024}M")
-        .mkString(" ")
-      val jit = mf.getCompilationMXBean.getTotalCompilationTime
-      val cls = mf.getClassLoadingMXBean.getLoadedClassCount
-      s"$code jit=${jit}ms gc=${gcMillis}ms classes=$cls"
-    }
-    // Cumulative JIT-compilation ms and code-cache occupancy (MB) —
-    // the counters that explain the positional mode where a late-suite
-    // query burns CPU compiling instead of executing (r10 q121).
-    def jitMillis: Long = mf.getCompilationMXBean.getTotalCompilationTime
-    def codeCacheMb: Double = mf.getMemoryPoolMXBeans.asScala
-      .filter(_.getName.startsWith("CodeHeap"))
-      .map(_.getUsage.getUsed.toDouble / 1024 / 1024).sum
-    // HOST-level (busy, total) jiffies from /proc/stat line 1 — every
-    // tenant of the box, not just this process. busy = total − idle −
-    // iowait (includes the hypervisor steal field AND co-tenant
-    // user/system time, which is what "steal" actually is on this
-    // oversubscribed host). Only the first 8 fields count: the kernel
-    // already folds guest/guest_nice into user/nice, so summing fields
-    // 9–10 would double-count guest CPU and inflate busy%. (−1, −1)
-    // when unreadable (non-Linux).
-    def hostCpu(): (Long, Long) =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        val line = try src.getLines().next() finally src.close()
-        val f = line.trim.split("\\s+").drop(1).take(8).map(_.toLong)
-        val idle = f(3) + (if (f.length > 4) f(4) else 0L)
-        (f.sum - idle, f.sum)
-      } catch { case _: Throwable => (-1L, -1L) }
-    // One timed execution with wall/cpu/gc/jit/code-cache/host-busy
-    // attribution; caches cleared after so the next timing is cold. A
-    // failed query must be VISIBLY broken (-1 seconds + an errors
-    // entry), never a plausible wall.
-    def timedRun(name: String): RunStats = {
-      val t0 = System.nanoTime(); val c0 = cpuNanos; val g0 = gcMillis
-      val j0 = jitMillis; val cc0 = codeCacheMb; val h0 = hostCpu()
-      val err = try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-        catch { case t: Throwable => Some(t.toString) }
-      graft.engine.Caches.release()
-      spark.catalog.clearCache()
-      val h1 = hostCpu()
-      val sec = if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
-      val cpu = if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9
-      val busy = if (h0._2 < 0 || h1._2 <= h0._2) -1.0
-        else 100.0 * (h1._1 - h0._1) / (h1._2 - h0._2)
-      RunStats(sec, cpu, (gcMillis - g0) / 1e3, (jitMillis - j0) / 1e3,
-        codeCacheMb - cc0, busy, err)
-    }
+    def run(name: String): RunStats =
+      measure(spark)(SparkEntry.queries(name)(spark, sfDir))()
     // Durable per-query record, appended + flushed as each query lands:
     // a truncated stdout capture (it has happened to the round artifact)
     // can lose the one summary line, but not this file.
@@ -326,33 +372,18 @@ object Bench {
     // quiet-host median; warm re-run 1.2x). Runs the first selected
     // query and discards the timing, so the loop starts on a warm JVM.
     selected.headOption.foreach { case (name, _) =>
-      val w = timedRun(name)
-      graft.operators.Pipeline.takeStageSeconds() // discarded with the wall
+      val w = run(name)
       System.err.println(
         f"[bench] warmup($name) ${w.sec}%.2f s (discarded)  ${vitals()}")
     }
     // Untimed fixture materialization: the fixture-backed queries read
-    // stored payload bytes / a persisted ANN index from scratch;
-    // building those is plumbing a real corpus never pays per query, so
-    // it happens here, outside every timed window (idempotent when the
-    // cache is warm). Skipped when a BENCH_ONLY filter selects none of
-    // them — a dev loop timing one unrelated query must not pay three
-    // media encodes and four index trainings first.
-    if (selected.keys.exists(SparkEntry.fixtureQueries)) {
-      val t0 = System.nanoTime()
-      // Warm only the fixtures the SELECTED queries read — a dev loop
-      // timing q30 alone must not pay four index trainings first.
-      try SparkEntry.warmFixtures(spark, sfDir,
-        selected.keySet.filter(SparkEntry.fixtureQueries))
-      catch { case t: Throwable =>
-        System.err.println(s"[bench] warmFixtures FAILED: $t") }
-      graft.engine.Caches.release()
-      spark.catalog.clearCache()
-      System.err.println(
-        f"[bench] warmFixtures ${(System.nanoTime() - t0) / 1e9}%.2f s (untimed)")
-    }
+    // stored payload bytes / a persisted ANN index from scratch; building
+    // those is plumbing a real corpus never pays per query, so it
+    // happens here, outside every timed window (idempotent when the
+    // cache is warm), and only for the fixtures the SELECTED queries read.
+    warmFixtures(spark, sfDir, selected.keys, "bench")
     val results = selected.map { case (name, _) =>
-      val r = timedRun(name)
+      val r = run(name)
       val delta = baseline.get(name)
         .filter(m => m > 0 && r.sec >= 0)
         .map(m => f"  x_med=${r.sec / m}%.2f").getOrElse("")
@@ -368,10 +399,8 @@ object Bench {
       // like the JVM vitals — NOT part of the oracled report): which
       // stage to buy hardware for, readable per round from the partial
       // log without a dev re-run.
-      val stages = graft.operators.Pipeline.takeStageSeconds()
-      if (stages.nonEmpty) {
-        val js = stages.map { case (s, sec) => jstr(s) + ":" + n2(sec) }
-          .mkString("{", ",", "}")
+      if (r.stages.nonEmpty) {
+        val js = stageJson(r.stages)
         System.err.println(s"[bench] $name stages: $js")
         partial.println(s"""{"q":"$name","stages":$js,"sf":"$sfDir"}""")
       }
@@ -386,7 +415,7 @@ object Bench {
     // runs' wall/cpu/gc ship in the artifact — see the scaladoc header
     // for the adjudication rule.
     def retimeOf(k: String): RunStats = {
-      val rt = timedRun(k)
+      val rt = run(k)
       System.err.println(
         f"[bench] retime $k%-24s ${rt.sec}%8.2f s cpu=${rt.cpuS}%7.2f s " +
           f"qjit=${rt.jitS}%5.2f s busy=${rt.busyPct}%3.0f%%  ${vitals()}")

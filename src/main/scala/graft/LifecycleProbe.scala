@@ -43,13 +43,10 @@ object LifecycleProbe {
     val rows = Seq("base" -> baseDir, s"x$k" -> outDir).map {
       case (label, dir) =>
         // Untimed: the stored fixture is the probe's input, not its
-        // subject (the ScaleProbe discipline).
-        val tw = System.nanoTime()
-        SparkEntry.warmFixtures(spark, dir,
-          Set("q148_minhash_stored_dedup"))
-        graft.engine.Caches.release()
-        System.err.println(f"[lifecycle] warm($label) " +
-          f"${(System.nanoTime() - tw) / 1e9}%.2f s (untimed)")
+        // subject (the ScaleProbe discipline). Without it there is no
+        // store to probe, so a failed build stops the probe.
+        Bench.warmFixtures(spark, dir, Seq("q148_minhash_stored_dedup"),
+          "lifecycle").foreach(throw _)
         val src = SparkEntry.storedDedupIndex(spark, dir, "minhash")
         val snap = graft.engine.Manifests.snapshot(spark, src).get
         val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)

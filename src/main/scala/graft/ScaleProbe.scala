@@ -57,38 +57,18 @@ object ScaleProbe {
     // training inside its scaled window — without this the ratio of a
     // stored-state query reads as its build cost (round-16 residual:
     // q214's first ×10 point carried four index builds).
-    val fixtureSel = names.toSet.filter(SparkEntry.fixtureQueries)
-    if (fixtureSel.nonEmpty) {
-      val tw = System.nanoTime()
-      Seq(baseDir, outDir).foreach { d =>
-        try SparkEntry.warmFixtures(spark, d, fixtureSel)
-        catch { case t: Throwable =>
-          System.err.println(s"[scale] warmFixtures($d) FAILED: $t") }
-        graft.engine.Caches.release()
-        spark.catalog.clearCache()
-      }
-      System.err.println(
-        f"[scale] warmFixtures ${(System.nanoTime() - tw) / 1e9}%.2f s (untimed)")
-    }
+    Seq(baseDir, outDir).foreach(Bench.warmFixtures(spark, _, names, "scale"))
 
     // The one parseable stdout line must survive hostile env paths.
-    import Bench.{jstr, n2}
-    def timed(name: String, dir: String): (Double, Seq[(String, Double)]) = {
-      val s0 = System.nanoTime()
-      val res = try { SparkEntry.queries(name)(spark, dir).count(); None }
-        catch { case t: Throwable => Some(t.toString) }
-      // Stage telemetry BEFORE the cache sweep (the Bench read order):
-      // a staged pipeline query leaves one wall per stage — emitted at
-      // BOTH scales so a superlinear stage is measured, not inferred
-      // from the total's concavity. Taken after every query, so no
-      // pipeline's stages are left to be read as the next query's.
-      val stages = graft.operators.Pipeline.takeStageSeconds()
-      graft.engine.Caches.release()
-      spark.catalog.clearCache()
-      val sec = (System.nanoTime() - s0) / 1e9
-      System.err.println(f"[scale] $name%-26s $dir%-40s $sec%8.2f s" +
-        res.map(e => s"  ERR $e").getOrElse(""))
-      (if (res.isDefined) -1.0 else sec, stages)
+    import Bench.{jstr, n2, stageJson}
+    // One measured run per (query, scale). Its pipeline stage seconds
+    // are kept at BOTH scales so a superlinear stage is measured, not
+    // inferred from the total's concavity.
+    def run(name: String, dir: String): Bench.RunStats = {
+      val r = Bench.measure(spark)(SparkEntry.queries(name)(spark, dir))()
+      System.err.println(f"[scale] $name%-26s $dir%-40s ${r.sec}%8.2f s" +
+        r.err.map(e => s"  ERR $e").getOrElse(""))
+      r
     }
 
     // Untimed warm-up: the first timed query otherwise absorbs the
@@ -98,23 +78,18 @@ object ScaleProbe {
     // (review finding). On a marker-warm corpus this is the JVM's
     // first Spark action, so the warm-up matters most exactly then.
     names.headOption.foreach { name =>
-      val (w, _) = timed(name, baseDir)
-      System.err.println(f"[scale] warmup($name) $w%.2f s (discarded)")
+      val w = run(name, baseDir)
+      System.err.println(f"[scale] warmup($name) ${w.sec}%.2f s (discarded)")
     }
-    def stageJson(stages: Seq[(String, Double)]): String =
-      stages.map { case (s, sec) => jstr(s) + ":" + n2(sec) }
-        .mkString("{", ",", "}")
-    val rows = names.map { name =>
-      val (base, baseStages) = timed(name, baseDir)
-      val (scaled, scaledStages) = timed(name, outDir)
-      val ratio = if (base > 0 && scaled >= 0) scaled / base else -1.0
-      name -> ((base, scaled, ratio, baseStages, scaledStages))
-    }
-    val qJson = rows.map { case (name, (b, s, r, bs, ss)) =>
+    val rows = names.map(name => (name, run(name, baseDir), run(name, outDir)))
+    val qJson = rows.map { case (name, b, s) =>
+      val ratio = if (b.sec > 0 && s.sec >= 0) s.sec / b.sec else -1.0
       val stagePart =
-        if (bs.isEmpty && ss.isEmpty) ""
-        else s""","stages_base":${stageJson(bs)},"stages_scaled":${stageJson(ss)}"""
-      s"""${jstr(name)}:{"base":${n2(b)},"scaled":${n2(s)},"ratio":${n2(r)}$stagePart}"""
+        if (b.stages.isEmpty && s.stages.isEmpty) ""
+        else s""","stages_base":${stageJson(b.stages)},""" +
+          s""""stages_scaled":${stageJson(s.stages)}"""
+      s"""${jstr(name)}:{"base":${n2(b.sec)},"scaled":${n2(s.sec)},""" +
+        s""""ratio":${n2(ratio)}$stagePart}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_probe","k":$k,"base_dir":${jstr(baseDir)},""" +
       s""""scaled_dir":${jstr(outDir)},"queries":$qJson}""")

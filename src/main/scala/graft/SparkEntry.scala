@@ -403,35 +403,28 @@ object SparkEntry {
   lazy val fixtureQueries: Set[String] =
     specs.filter(_.fixtures.nonEmpty).map(_.name).toSet
 
-  /** Untimed fixture warm for the bench main: materializes the stored-
-    * bytes media tables and persisted ANN indexes that the SELECTED
-    * fixture queries read — and only those (a dev loop timing q30 must
-    * not pay four index trainings; review finding) — so the timed
-    * queries measure decode / index-query work over stored state
-    * (idempotent — a warm cache is a no-op scan / marker check). */
+  /** Untimed fixture warm, reached by the mains through
+    * [[Bench.warmFixtures]]: materializes the stored-bytes media tables
+    * and persisted ANN indexes that the SELECTED fixture queries read —
+    * and only those (a dev loop timing q30 must not pay four index
+    * trainings; review finding) — so the timed queries measure decode /
+    * index-query work over stored state (idempotent — a warm cache is a
+    * no-op scan / marker check). Each kind's caches are released after
+    * its build. */
   def warmFixtures(s: SparkSession, dir: String,
       selected: Set[String] = fixtureQueries): Unit = {
     val kinds = specs.filter(q => selected(q.name)).flatMap(_.fixtures).distinct
-    kinds.foreach {
-      case ("media", k) => mediaFixture(s, dir, k).count()
-      case ("dedup", k) =>
-        storedDedupIndex(s, dir, k)
-        graft.engine.Caches.release()
-      case ("bpemodel", "b10") =>
-        storedByteBpeModel(s, dir)
-        graft.engine.Caches.release()
-      case ("bpemodel", _) =>
-        storedBpeModel(s, dir)
-        graft.engine.Caches.release()
-      case ("qualitymodel", _) =>
-        storedQualityModel(s, dir)
-        graft.engine.Caches.release()
-      case ("runledger", _) =>
-        storedRunLedger(s, dir)
-        graft.engine.Caches.release()
-      case (_, k) =>
-        storedAnnIndex(s, dir, k)
-        graft.engine.Caches.release()
+    kinds.foreach { kind =>
+      kind match {
+        case ("media", k) => mediaFixture(s, dir, k).count()
+        case ("dedup", k) => storedDedupIndex(s, dir, k)
+        case ("bpemodel", "b10") => storedByteBpeModel(s, dir)
+        case ("bpemodel", _) => storedBpeModel(s, dir)
+        case ("qualitymodel", _) => storedQualityModel(s, dir)
+        case ("runledger", _) => storedRunLedger(s, dir)
+        case (_, k) => storedAnnIndex(s, dir, k)
+      }
+      graft.engine.Caches.release()
     }
   }
 

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/oracle_check.py`). Each write is the action of one
+  * [[Bench.measure]] run, which releases the query's caches after it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
@@ -13,14 +15,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Bench.measure(spark)(fn(spark, sfDir))(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+          .err.foreach(e => System.err.println(s"[verify] $name failed: $e"))
       }
-      graft.engine.Caches.release()
-      spark.catalog.clearCache()
-    }
     // Bench.jstr escapes every control char: a tab or CR in an oracle's
     // SQL must not make the artifact unparseable.
     import Bench.jstr

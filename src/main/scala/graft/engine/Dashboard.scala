@@ -21,19 +21,12 @@ object Dashboard {
     else byMonth.filter(col("airline_name").isin(airlines: _*))
   }
 
-  /** The five chart plans over the filtered rollups, exactly the per-chart
-    * pandas group-bys at `/root/reference/src/app.py:94-168`. */
+  /** Chart plans over the filtered rollups, exactly the reference
+    * dashboard's per-chart pandas group-bys (`src/app.py:94-168`). The
+    * ranking, trend and delay-pie charts are [[Aggregates.ranking]],
+    * [[Aggregates.trend]] and [[Aggregates.delayAttribution]] themselves. */
   def kpiCards(filteredAirlineMonthly: DataFrame): DataFrame =
     Aggregates.kpis(filteredAirlineMonthly)
-
-  def rankingChart(filteredAirlineMonthly: DataFrame): DataFrame =
-    Aggregates.ranking(filteredAirlineMonthly)
-
-  def trendChart(filteredAirlineMonthly: DataFrame): DataFrame =
-    Aggregates.trend(filteredAirlineMonthly)
-
-  def delayPie(filteredAirlineMonthly: DataFrame): DataFrame =
-    Aggregates.delayAttribution(filteredAirlineMonthly)
 
   def geoMap(filteredAirportPerf: DataFrame, coords: DataFrame): DataFrame =
     Aggregates.geoAggregate(Aggregates.withCoords(filteredAirportPerf, coords))

@@ -2,8 +2,10 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** The completion-marker lifecycle every persisted-state artifact uses
-  * (ANN indexes, dedup indexes, BPE models): a marker file committed
+/** The completion-marker lifecycle of the two artifacts that are not
+  * versioned [[Manifests]] stores: [[graft.streaming.DriftMonitor]]'s
+  * reference state and the [[ScaleData]] ×k corpus (the ANN, dedup and
+  * BPE stores commit through [[Manifests]]). A marker file is committed
   * strictly AFTER the builder's whole write sequence returns, dropped
   * for the duration of any mutation — so a crash anywhere inside a
   * build or append leaves a VISIBLY incomplete directory (rebuild),

@@ -82,19 +82,6 @@ object ScaleData {
     s"$baseDir|k=$k|tags=2|${fp("documents", "doc_id")}|${fp("lineitem", "l_orderkey")}"
   }
 
-  /** True iff `outDir` holds a completed corpus matching `baseDir`/k. */
-  def matches(spark: SparkSession, baseDir: String, outDir: String,
-      k: Int): Boolean = {
-    val f = Markers.fs(spark, outDir)
-    val p = Markers.path(outDir, Marker)
-    f.exists(p) && {
-      val in = f.open(p)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      stored == fingerprint(spark, baseDir, k)
-    }
-  }
-
   /** Synthesize the ×k corpus under `outDir` (skipped when a completed
     * corpus with a MATCHING source fingerprint is present; a stale one
     * is deleted and rebuilt). */

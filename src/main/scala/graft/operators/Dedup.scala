@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.engine.Caches.materialized
+import graft.engine.Partitioning.parallelized
 import graft.functions.{TextFunctions, TextKernels}
 
 /** Document deduplication for training-data pipelines: exact, n-gram
@@ -20,20 +22,6 @@ import graft.functions.{TextFunctions, TextKernels}
   *    pairs, joined back by id — the classic filter-verify pattern.
   */
 object Dedup {
-
-  /** Spread an under-partitioned input (e.g. a single small parquet file
-    * → one scan task) across the cluster before CPU-heavy per-document
-    * work. Shingling/hashing cost is per-row, not per-byte, so scan
-    * parallelism must track cores, not file sizes; inputs that already
-    * have enough partitions pass through untouched (no shuffle at 100 TB,
-    * where scans are naturally wide). */
-  private def parallelized(df: DataFrame): DataFrame =
-    graft.engine.Partitioning.parallelized(df)
-
-  /** Persist + eager count barrier + deferred-release registration —
-    * see [[graft.engine.Caches.materialized]]. */
-  private def materialized(df: DataFrame): DataFrame =
-    graft.engine.Caches.materialized(df)
 
   // ---------------------------------------------------------------- exact
 
@@ -669,15 +657,6 @@ object Dedup {
       .agg(minCols.head, minCols.tail: _*)
   }
 
-  /** LSH band keys: signature split into `bands` bands of
-    * `numHashes/bands` rows each; key = band index + joined values. */
-  def lshBandKeys(sigCol: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)), j =>
-      concat_ws(":", j.cast("string"),
-        array_join(transform(slice(sigCol, j * r + 1, lit(r)), _.cast("string")), "_")))
-  }
-
   /** MinHash/LSH near-duplicate pairs with exact-Jaccard verification.
     *
     * Pipeline: shingle → signature (columnar) → explode band keys →
@@ -1002,11 +981,6 @@ object Dedup {
 
   // ------------------------------------------------- cluster + survivors
 
-  /** Diagnostic only: rounds the last [[dedupClusters]] call took to
-    * converge (read by the chain-graph spec; meaningless under
-    * concurrent callers). */
-  @volatile private[graft] var lastClusterRounds: Int = 0
-
   /** Connected components over near-dup pairs → (id, cluster_id = min id
     * in component). Iterative min-label propagation with pointer
     * doubling: each round every node takes the minimum of its own, its
@@ -1065,7 +1039,6 @@ object Dedup {
     var prevSum = labelSum(labelsCached)
     var labels = GraftSql.rddPinned(labelsCached)
     var converged = prevSum == null // empty graph
-    lastClusterRounds = 0
     while (!converged) {
       val nbrMin = sym
         .join(labels.select(col("id").as("id_b"), col("label").as("nl")), Seq("id_b"))
@@ -1097,7 +1070,6 @@ object Dedup {
       labels = GraftSql.rddPinned(next)
       converged = s == prevSum
       prevSum = s
-      lastClusterRounds += 1
     }
     // The edge caches' consumers all ran inside the loop, and the final
     // labels cache is warm (materialized by the last convergence sum) —

@@ -122,9 +122,9 @@ object Pipeline {
     * `(metric, value)` report assembly is the caller's action and is
     * the residual between the bench wall and this table's sum.
     *
-    * DIAGNOSTIC channel (the [[Dedup.lastClusterRounds]] precedent):
-    * taken after every query by the bench and scale-probe telemetry
-    * (stderr + BENCH_PARTIAL.jsonl). Deliberately NOT part of the
+    * DIAGNOSTIC channel: taken after every query by
+    * [[graft.Bench.measure]] into `RunStats.stages`, which the bench
+    * and scale-probe telemetry print (stderr + BENCH_PARTIAL.jsonl). Deliberately NOT part of the
     * oracled pipeline reports — wall time is not oracle-able, and a
     * row of it would break the hash gate; CORRECTNESS stays on the
     * value columns. Meaningless under concurrent callers.

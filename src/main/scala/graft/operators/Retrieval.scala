@@ -372,14 +372,6 @@ object Retrieval {
         expr(s"(est_bytes + ${targetBucketBytes - 1}) DIV $targetBucketBytes"))))
   }
 
-  /** [[bucketsForPostings]] evaluated on a corpus (one distinct-count
-    * aggregate): what a partitioned build passes as
-    * `postingsBuckets`. */
-  def derivePostingsBuckets(docs: DataFrame, idCol: String,
-      textCol: String, targetBucketBytes: Long = 256L << 20): Int =
-    bucketsSizingTable(docs, idCol, textCol, targetBucketBytes)
-      .head().getAs[Long]("buckets").toInt
-
   /** The postings layout the snapshot's commit was made with:
     * Some(bucket count) for the partitioned layout, None for flat —
     * read from the commit's own metadata (carried ON the resolved

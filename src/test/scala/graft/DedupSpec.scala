@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -27,14 +28,19 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // Worst case for plain min-label propagation: one path graph, the
     // min label must travel the whole chain — 64 rounds without the
-    // pointer-doubling shortcut, ~log2(64)+slack with it.
+    // pointer-doubling shortcut, ~log2(64)+slack with it. Every round
+    // runs at least two actions (the propagation barrier and the
+    // convergence sum), so plain propagation starts at least 128 jobs
+    // here (766 measured with the shortcut join removed); with it, 100
+    // were measured, and the bound leaves 20% over that.
     val chain = (0L until 64L).sliding(2).map(w => (w(0), w(1))).toSeq
       .toDF("id_a", "id_b")
-    val out = Dedup.dedupClusters(chain)
+    val (out, events) =
+      SparkEvents.during(spark.sparkContext)(Dedup.dedupClusters(chain))
+    val jobs = events.count(_.isInstanceOf[SparkListenerJobStart])
+    assert(jobs <= 120, s"expected O(log n) rounds on a chain, got $jobs jobs")
     assert(out.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(out.count() == 64)
-    assert(Dedup.lastClusterRounds <= 10,
-      s"expected O(log n) rounds on a chain, got ${Dedup.lastClusterRounds}")
     graft.engine.Caches.release()
   }
 

@@ -1,16 +1,15 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 
 /** Dev-only parameterized timing/plan probe (test sourceset, never
   * shipped). One main, seven modes, each over any registered queries:
   *
   *   sbt 'Test/runMain graft.DevProbe wall q23_ngram_jaccard,q43_prefix_jaccard'
-  *     per-query wall + GC + JIT attribution (is a slow run compute or
-  *     JVM ramp?)
+  *     per-query wall + process CPU + GC + JIT attribution (is a slow
+  *     run compute or JVM ramp?)
   *   sbt 'Test/runMain graft.DevProbe warm q28_ivf_topk'
   *     three timed same-JVM runs (cold-vs-warm delta = JIT/codegen ramp,
   *     not plan cost)
@@ -25,6 +24,10 @@ import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart,
   *     one line per job with its call site and duration
   *   sbt 'Test/runMain graft.DevProbe explain q43_prefix_jaccard'
   *     formatted initial plan, then the AQE-final plan after one run
+  *
+  * Every mode runs a query through [[Bench.measure]], the path Bench
+  * times, so every wall printed here includes the cache release after
+  * the action, as Bench's does. A failed query prints its error.
   *
   * Defaults to the historically flag-prone queries when none are given.
   * Replaces the five per-investigation DevProbe mains from rounds 5–8;
@@ -47,32 +50,23 @@ object DevProbe {
     // its plans (and timings) can diverge from what Bench measures.
     val spark = graft.engine.Sessions.local(cpus)
 
-    def gcMillis: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def jitMillis: Long = java.lang.management.ManagementFactory
-      .getCompilationMXBean.getTotalCompilationTime
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      graft.engine.Caches.release()
-      spark.catalog.clearCache()
-      wall
+    def run(name: String)(act: DataFrame => Unit = _.count()): Bench.RunStats = {
+      val r = Bench.measure(spark)(SparkEntry.queries(name)(spark, sfDir))(act)
+      r.err.foreach(e => println(s"[probe] $name ERR $e"))
+      r
     }
 
     mode match {
       case "wall" =>
         names.foreach { name =>
-          val (g0, j0) = (gcMillis, jitMillis)
-          val wall = timed(name)
-          println(f"[probe] $name%-26s wall=$wall%7.2f s " +
-            f"gc=${(gcMillis - g0) / 1000.0}%6.2f s " +
-            f"jit=${(jitMillis - j0) / 1000.0}%6.2f s")
+          val r = run(name)()
+          println(f"[probe] $name%-26s wall=${r.sec}%7.2f s cpu=${r.cpuS}%7.2f s " +
+            f"gc=${r.gcS}%6.2f s jit=${r.jitS}%6.2f s")
         }
 
       case "warm" =>
         names.foreach { name =>
-          val runs = (1 to 3).map(_ => timed(name))
+          val runs = (1 to 3).map(_ => run(name)().sec)
           println(f"[probe] $name%-26s " +
             runs.map(w => f"$w%7.2f").mkString(" s -> ") +
             f" s  (cold/warm=${runs.head / runs.last}%.2fx)")
@@ -80,7 +74,7 @@ object DevProbe {
 
       case "stages" =>
         names.foreach { name =>
-          val (wall, events) = SparkEvents.during(spark.sparkContext)(timed(name))
+          val (wall, events) = SparkEvents.during(spark.sparkContext)(run(name)().sec)
           println(f"[probe] ==== $name wall=$wall%7.2f s ====")
           val stages = events.collect { case e: SparkListenerStageCompleted =>
             val si = e.stageInfo
@@ -100,12 +94,11 @@ object DevProbe {
 
       case "plan" =>
         names.foreach { name =>
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          df.count()
-          println(s"[probe] ==== $name executed plan ====")
-          println(df.queryExecution.executedPlan.toString)
-          graft.engine.Caches.release()
-          spark.catalog.clearCache()
+          run(name) { df =>
+            df.count()
+            println(s"[probe] ==== $name executed plan ====")
+            println(df.queryExecution.executedPlan.toString)
+          }
         }
 
       // Job/stage/task counts in the timed body — the evidence for
@@ -114,7 +107,7 @@ object DevProbe {
       // bound: 8c/32c ≈ 1).
       case "jobs" =>
         names.foreach { name =>
-          val (wall, events) = SparkEvents.during(spark.sparkContext)(timed(name))
+          val (wall, events) = SparkEvents.during(spark.sparkContext)(run(name)().sec)
           val jobs = events.collect { case js: SparkListenerJobStart => js }
           val tasks = events.count(_.isInstanceOf[SparkListenerTaskEnd])
           println(f"[probe] $name%-26s wall=$wall%7.2f s " +
@@ -126,7 +119,7 @@ object DevProbe {
       // answers WHICH driver actions a 100-job query body is made of.
       case "jobtrace" =>
         names.foreach { name =>
-          val (wall, events) = SparkEvents.during(spark.sparkContext)(timed(name))
+          val (wall, events) = SparkEvents.during(spark.sparkContext)(run(name)().sec)
           println(f"[probe] ==== $name wall=$wall%7.2f s ====")
           val ends = events.collect { case je: SparkListenerJobEnd => je.jobId -> je.time }.toMap
           events.collect { case js: SparkListenerJobStart => js }.sortBy(_.time).foreach { js =>
@@ -147,15 +140,14 @@ object DevProbe {
       // Exchange-count / join-strategy claims are checkable offline.
       case "explain" =>
         names.foreach { name =>
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          println(s"[probe] ==== $name explain(formatted) ====")
-          println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          df.count()
-          println(s"[probe] ==== $name AQE-final executed plan ====")
-          println(df.queryExecution.executedPlan.toString)
-          graft.engine.Caches.release()
-          spark.catalog.clearCache()
+          run(name) { df =>
+            println(s"[probe] ==== $name explain(formatted) ====")
+            println(df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+            df.count()
+            println(s"[probe] ==== $name AQE-final executed plan ====")
+            println(df.queryExecution.executedPlan.toString)
+          }
         }
 
       case other =>

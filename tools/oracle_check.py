@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Local pre-check replicating the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir> [queries]
+
+The optional third argument is the comma-separated query filter that
+`graft.Verify` takes; only those queries are checked, and a filter name
+without oracle SQL fails.
 
 For each query in <verifyOutDir>/oracle_sql.json: run the oracle SQL in
 DuckDB (tables = <sfDir>/*.parquet registered as views by name), load the
@@ -28,13 +32,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only: set = None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted((only or set()) - oracle.keys()):
+        print(f"FAIL {name}: no oracle SQL")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
+        if only is not None and name not in only:
+            continue
         try:
             exp = canon(con.sql(sql).df())
         except Exception as e:
@@ -83,4 +92,5 @@ def main(sf_dir: str, out_dir: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2],
+                  set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None))
