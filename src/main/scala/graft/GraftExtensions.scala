@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{TextKernels, VectorExpressions}
-import graft.plans.BinnedIntervalJoinRule
+import graft.plans.{BinnedIntervalJoinRule, UnreadLookupJoinRule}
 
 /** SQL surface for the library's native kernels + its optimizer rules.
   *
@@ -13,7 +13,8 @@ import graft.plans.BinnedIntervalJoinRule
   * `--conf spark.sql.extensions=graft.GraftExtensions` on an existing
   * deployment — injects [[graft.plans.BinnedIntervalJoinRule]] (naive
   * timestamp range joins re-planned as binned equi-joins instead of
-  * nested loops) and registers the custom Catalyst expressions as plain
+  * nested loops) and [[graft.plans.UnreadLookupJoinRule]] (unread LEFT
+  * lookup joins over a verified key dropped) and registers the custom Catalyst expressions as plain
   * SQL functions, so `spark.sql` users (and SQL views like q21's) get
   * the same codegen'd kernels the DataFrame API uses:
   *
@@ -62,6 +63,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Timestamp range joins (no equi-key → BroadcastNestedLoopJoin)
     // re-planned as binned equi-joins; see BinnedIntervalJoinRule.
     ext.injectOptimizerRule(_ => BinnedIntervalJoinRule)
+
+    // LEFT lookup joins over a verified unique key that nothing reads
+    // are dropped; see UnreadLookupJoinRule.
+    ext.injectOptimizerRule(_ => UnreadLookupJoinRule)
 
     // Physical planning for the TopKPerKey logical node (bounded-heap
     // partial/final ranking instead of a full shuffle + sort).

@@ -38,7 +38,19 @@ object StarSchema {
     * plus the calendar dim joined on date_key (the reference's 4th dim
     * join, `/root/reference/sql/wide_table.sql:35-36`) supplying `month`.
     * All four dims are broadcast — the fact table never shuffles for a
-    * dimension lookup. */
+    * dimension lookup.
+    *
+    * Every join is an N:1 LEFT lookup, so one whose columns a query never
+    * reads is dropped by [[graft.plans.UnreadLookupJoinRule]] (the
+    * `orders`, `supplier`, `customer` and `nation` keys are verified
+    * unique by [[Tables]]). The generated calendar is not a `Tables`
+    * table and is never dropped by that rule. What the dashboard queries
+    * keep:
+    *   - q12 (airline list): `supplier` only;
+    *   - q13 (filtered KPI cards) and q20 (top-10 rows): `orders`,
+    *     `supplier` and the calendar; `customer` and both `nation` roles
+    *     go;
+    *   - q01 (the whole view) keeps all five. */
   def wideView(s: SparkSession, dir: String): DataFrame = {
     val nat = nation(s, dir)
     // Generated calendar dim (the standard DW practice): a date-range

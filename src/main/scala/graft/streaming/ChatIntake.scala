@@ -87,13 +87,8 @@ object ChatIntake {
   private def readRouted(spark: SparkSession, dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
+    val hasData = fs.exists(p) &&
+      graft.engine.Tables.leafFiles(fs, p).exists(_.getPath.getName.endsWith(".parquet"))
     if (hasData)
       // batch_id returns as an inferred partition column — restore type.
       spark.read.parquet(dir)

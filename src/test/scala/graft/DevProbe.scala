@@ -95,7 +95,9 @@ object DevProbe {
       case "plan" =>
         names.foreach { name =>
           run(name) { df =>
-            df.count()
+            // collect(), not count(): count() runs its own QueryExecution
+            // and leaves df's plan at isFinalPlan=false.
+            df.collect()
             println(s"[probe] ==== $name executed plan ====")
             println(df.queryExecution.executedPlan.toString)
           }
@@ -144,7 +146,7 @@ object DevProbe {
             println(s"[probe] ==== $name explain(formatted) ====")
             println(df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
-            df.count()
+            df.collect()
             println(s"[probe] ==== $name AQE-final executed plan ====")
             println(df.queryExecution.executedPlan.toString)
           }
