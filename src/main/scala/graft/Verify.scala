@@ -2,7 +2,9 @@ package graft
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare
-  * (`tools/oracle_check.py`). Each write is the action of one
+  * (`tools/oracle_check.py`), and verify_failures.json: query name →
+  * error of every run that failed (`{}` when none did, so a file left by
+  * an earlier run cannot mislead). Each write is the action of one
   * [[Bench.measure]] run, which releases the query's caches after it. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -12,19 +14,24 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.engine.Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         Bench.measure(spark)(fn(spark, sfDir))(
           _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
-          .err.foreach(e => System.err.println(s"[verify] $name failed: $e"))
+          .err.map { e =>
+            System.err.println(s"[verify] $name failed: $e")
+            name -> e
+          }
       }
     // Bench.jstr escapes every control char: a tab or CR in an oracle's
-    // SQL must not make the artifact unparseable.
+    // SQL or an error must not make the artifact unparseable.
     import Bench.jstr
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def writeJson(file: String, kvs: Iterable[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), kvs.map {
+        case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}"))
+    writeJson("oracle_sql.json", SparkEntry.oracleSql)
+    writeJson("verify_failures.json", failures)
     spark.stop()
   }
 }

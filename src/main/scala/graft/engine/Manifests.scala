@@ -351,8 +351,9 @@ object Manifests {
   /** ONE atomic commit: claim version N+1, let `stage` write new data
     * under `seg<N+1>/` (handed the claimed version, the segment's
     * absolute path, and the live snapshot — None on first build) and
-    * return the FULL new table→refs map (use [[Snapshot.tables]] ++
-    * own [[ref]]s for an append; only own refs for a rebuild), then
+    * return the FULL new table→refs map (a store's build or append
+    * commits through [[build]] / [[append]], which spell that map;
+    * raw `publish` is for custom maps like [[rollback]]'s), then
     * write the `v<N+1>` manifest, PUBLISH via exclusive marker create,
     * and GC manifests past `keepVersions` plus any segment no kept
     * manifest references. Returns the published version.
@@ -583,7 +584,85 @@ object Manifests {
 
   /** `dir`-relative ref of `table` inside version `v`'s segment — what
     * a `stage` callback puts in its returned map. */
-  def ref(v: Long, table: String): String = s"${segName(v)}/$table"
+  private[graft] def ref(v: Long, table: String): String =
+    s"${segName(v)}/$table"
+
+  /** The new segment a [[build]] or [[append]] stage writes into. The
+    * commit lists every table named through [[write]] or [[path]]. */
+  final class Segment private[Manifests] (root: String) {
+    private val named = scala.collection.mutable.LinkedHashSet.empty[String]
+    /** Absolute path of `table` in this segment, for a caller with its
+      * own writer (`partitionBy`, `coalesce`) or a read-back. */
+    def path(table: String): String = { named += table; s"$root/$table" }
+    /** Write `df` as `table` of this segment (parquet, overwrite). */
+    def write(table: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(path(table))
+    private[Manifests] def tables: Seq[String] = named.toSeq
+  }
+
+  /** Commit one new segment as the WHOLE artifact — a build or a
+    * rewrite: the manifest lists exactly the tables `stage` wrote, and
+    * older segments age out with the GC horizon. Returns the version. */
+  def build(spark: SparkSession, dir: String, tag: String = "build",
+      meta: => Map[String, String] = Map.empty, keepVersions: Int = 2)
+      (stage: Segment => Unit): Long =
+    commitSegment(spark, dir, tag, meta, keepVersions, carry = false)(stage)
+
+  /** Commit one new segment ON TOP of the live snapshot [[publish]]
+    * resolves under its claim: the manifest carries every table that
+    * snapshot holds, and each table `stage` wrote gets its one new ref
+    * appended — O(|batch|) writes, history never rewritten. On an
+    * unbuilt dir it lists only the written tables. Returns the
+    * version. */
+  def append(spark: SparkSession, dir: String, tag: String = "append",
+      meta: => Map[String, String] = Map.empty, keepVersions: Int = 2)
+      (stage: Segment => Unit): Long =
+    commitSegment(spark, dir, tag, meta, keepVersions, carry = true)(stage)
+
+  private def commitSegment(spark: SparkSession, dir: String, tag: String,
+      meta: => Map[String, String], keepVersions: Int, carry: Boolean)
+      (stage: Segment => Unit): Long =
+    publish(spark, dir, keepVersions, tag, meta) { (v, root, live) =>
+      val seg = new Segment(root)
+      stage(seg)
+      val base = live.filter(_ => carry)
+        .fold(Map.empty[String, Seq[String]])(_.tables)
+      base ++ seg.tables.map(t =>
+        t -> (base.getOrElse(t, Seq.empty) :+ ref(v, t)))
+    }
+
+  /** COMPACTION: appends accumulate small segments, so a long-lived
+    * store piles up thousands of tiny files — task-per-file scheduling
+    * and NameNode pressure on every read. Publish ONE version, tagged
+    * `compact`, whose segment rewrites every table of the live snapshot
+    * into files of about `targetBytes` (DISTINCT first — a no-op on a
+    * healthy store, the repair of one half-doubled by a pre-guard
+    * crash, and where tolerated cross-append duplicates are paid down)
+    * and whose manifest lists only that segment. In-flight readers keep
+    * their resolved snapshot; reads over the compacted store equal the
+    * distinct rows before. `artifact` names the store kind in the
+    * refusal of an unbuilt store. */
+  def compact(spark: SparkSession, dir: String, artifact: String,
+      targetBytes: Long = 64L << 20): Long = {
+    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
+    val snap = resolveOrFail(spark, dir, artifact,
+      "compaction needs a finished build")
+    build(spark, dir, tag = "compact") { seg =>
+      snap.tables.keys.foreach(t => seg.write(t, snap.read(spark, t)
+        .distinct().repartition(targetFiles(spark, snap, t, targetBytes))))
+    }
+  }
+
+  /** How many files of about `targetBytes` hold `table` of `snap` (at
+    * least one) — the size target of every compaction. */
+  private[graft] def targetFiles(spark: SparkSession, snap: Snapshot,
+      table: String, targetBytes: Long): Int = {
+    val paths = snap.paths(table)
+    val fs = fsOf(spark, paths.head)
+    val bytes = paths.map(p => fs.getContentSummary(
+      new org.apache.hadoop.fs.Path(p)).getLength).sum
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+  }
 
   /** RESTORE: publish a NEW version whose table map is exactly
     * version `v`'s — Delta's `RESTORE TABLE ... VERSION AS OF`,

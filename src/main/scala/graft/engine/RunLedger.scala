@@ -49,13 +49,11 @@ object RunLedger {
       s"run '$runId' is already recorded at $ledgerDir — run ids are " +
         "unique; a re-run needs a new id")
     import spark.implicits._
-    Manifests.publish(spark, ledgerDir, keepVersions, tag = runId) {
-      (v, seg, live) =>
-        pins.map(p => (runId, p.store, p.dir, p.version))
-          .toDF("run_id", "store", "dir", "version")
-          .coalesce(1).write.parquet(s"$seg/pins")
-        Map("pins" -> (live.map(_.tables("pins")).getOrElse(Seq.empty) :+
-          Manifests.ref(v, "pins")))
+    Manifests.append(spark, ledgerDir, tag = runId,
+      keepVersions = keepVersions) { seg =>
+      pins.map(p => (runId, p.store, p.dir, p.version))
+        .toDF("run_id", "store", "dir", "version")
+        .coalesce(1).write.parquet(seg.path("pins"))
     }
   }
 
@@ -87,11 +85,9 @@ object RunLedger {
       throw new IllegalStateException(
         s"no run ledger at $ledgerDir — nothing to compact"))
     val all = snap.read(spark, "pins")
-    Manifests.publish(spark, ledgerDir, keepVersions, tag = "compact") {
-      (v, seg, _) =>
-        all.coalesce(1).write.parquet(s"$seg/pins")
-        Map("pins" -> Seq(Manifests.ref(v, "pins")))
-    }
+    Manifests.build(spark, ledgerDir, tag = "compact",
+      keepVersions = keepVersions)(
+      seg => all.coalesce(1).write.parquet(seg.path("pins")))
   }
 
   /** Every kept run's pins as one relation —

@@ -1122,12 +1122,8 @@ object CorpusStats {
     * One atomic manifest commit like every stored artifact. */
   def saveBpeModel(docs: DataFrame, textCol: String, rounds: Int,
       dir: String, minFreq: Long = 1L): Unit = {
-    graft.engine.Manifests.publish(docs.sparkSession, dir, tag = "build") { (v, seg, _) =>
-      bpeTrainLocal(docs, textCol, rounds, minFreq)
-        .write.mode("overwrite").parquet(s"$seg/merges")
-      Map("merges" -> Seq(graft.engine.Manifests.ref(v, "merges")))
-    }
-    ()
+    graft.engine.Manifests.build(docs.sparkSession, dir)(
+      _.write("merges", bpeTrainLocal(docs, textCol, rounds, minFreq)))
   }
 
   /** Tokenize an ARBITRARY corpus with a STORED model: replay the
@@ -1549,12 +1545,8 @@ object CorpusStats {
     * production 30k-round shape). */
   def saveByteBpeModel(docs: DataFrame, textCol: String, rounds: Int,
       dir: String, minFreq: Long = 1L): Unit = {
-    graft.engine.Manifests.publish(docs.sparkSession, dir, tag = "build") { (v, seg, _) =>
-      byteBpeTrainLocal(docs, textCol, rounds, minFreq)
-        .write.mode("overwrite").parquet(s"$seg/merges")
-      Map("merges" -> Seq(graft.engine.Manifests.ref(v, "merges")))
-    }
-    ()
+    graft.engine.Manifests.build(docs.sparkSession, dir)(
+      _.write("merges", byteBpeTrainLocal(docs, textCol, rounds, minFreq)))
   }
 
   /** Tokenize an ARBITRARY corpus with a STORED byte-level model —

@@ -760,38 +760,35 @@ object Dedup {
     *   - `bands`   — (id, band): the exploded LSH band keys (the
     *     candidate equi-join side).
     *
-    * COMMIT PROTOCOL — unlike the other stored families' dropped-marker
-    * gate, this index runs [[graft.engine.Manifests]]' versioned
-    * snapshots: the build writes one immutable data segment and
-    * publishes manifest v1 with one atomic marker create. A reader
-    * resolves a snapshot ONCE and reads params/sh/bands from the SAME
-    * immutable version — never a mid-mutation view — and a resolved
-    * snapshot survives `keepVersions - 1` subsequent commits
-    * (ManifestsSpec holds a concurrent reader across append and
-    * compaction). [[minhashNearDupFromIndex]] over this index is
-    * bit-equal to the recompute-everything [[minhashNearDupAcross]]
-    * with the same parameters (asserted in DedupSpec; the inline
-    * twin's oracle is therefore also this index's oracle). */
+    * COMMIT PROTOCOL — like every stored family, this index runs
+    * [[graft.engine.Manifests]]' versioned snapshots: the build writes
+    * one immutable data segment and publishes manifest v1 with one
+    * atomic marker create. A reader resolves a snapshot ONCE and reads
+    * params/sh/bands from the SAME immutable version — never a
+    * mid-mutation view — and a resolved snapshot survives
+    * `keepVersions - 1` subsequent commits (ManifestsSpec holds a
+    * concurrent reader across append and
+    * [[graft.engine.Manifests.compact]]). [[minhashNearDupFromIndex]]
+    * over this index is bit-equal to the recompute-everything
+    * [[minhashNearDupAcross]] with the same parameters (asserted in
+    * DedupSpec; the inline twin's oracle is therefore also this index's
+    * oracle). */
   def buildMinhashIndex(ref: DataFrame, dir: String, idCol: String,
       textCol: String, n: Int = 3, numHashes: Int = DefaultNumHashes,
       bands: Int = DefaultBands, seed: Long = 42L): Unit = {
     val spark = ref.sparkSession
     import spark.implicits._
-    graft.engine.Manifests.publish(spark, dir, tag = "build") { (v, seg, _) =>
-      Seq((n, numHashes, bands, seed))
-        .toDF("n", "num_hashes", "bands", "seed")
-        .write.mode("overwrite").parquet(s"$seg/params")
+    graft.engine.Manifests.build(spark, dir) { seg =>
+      seg.write("params", Seq((n, numHashes, bands, seed))
+        .toDF("n", "num_hashes", "bands", "seed"))
       val sh = materialized(parallelized(ref)
         .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh")))
-      sh.write.mode("overwrite").parquet(s"$seg/sh")
+      seg.write("sh", sh)
       val (as, bs) = hashFamily(numHashes, seed)
-      sh.select(col("id"), explode(TextKernels.minhashBandsCol(
-          col("sh"), as, bs, bands, MinhashP)).as("band"))
-        .write.mode("overwrite").parquet(s"$seg/bands")
-      Seq("params", "sh", "bands")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
+      seg.write("bands", sh.select(col("id"), explode(
+        TextKernels.minhashBandsCol(col("sh"), as, bs, bands, MinhashP))
+        .as("band")))
     }
-    ()
   }
 
   /** Stored LSH params of a resolved index snapshot. */
@@ -829,83 +826,14 @@ object Dedup {
     val novelSh = materialized(sh.join(
       snap.read(spark, "sh").select("id"), Seq("id"), "left_anti"))
     if (!novelSh.isEmpty) {
-      graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-        novelSh.write.mode("overwrite").parquet(s"$seg/sh")
+      graft.engine.Manifests.append(spark, dir) { seg =>
+        seg.write("sh", novelSh)
         val (as, bs) = hashFamily(numHashes, seed)
-        novelSh.select(col("id"), explode(TextKernels.minhashBandsCol(
-            col("sh"), as, bs, bandsN, MinhashP)).as("band"))
-          .write.mode("overwrite").parquet(s"$seg/bands")
-        snap.tables ++ Seq(
-          "sh" -> (snap.tables("sh") :+ graft.engine.Manifests.ref(v, "sh")),
-          "bands" -> (snap.tables("bands") :+
-            graft.engine.Manifests.ref(v, "bands")))
+        seg.write("bands", novelSh.select(col("id"), explode(
+          TextKernels.minhashBandsCol(col("sh"), as, bs, bandsN, MinhashP))
+          .as("band")))
       }
-      ()
     }
-  }
-
-  /** Index COMPACTION: every append adds a segment of small parquet
-    * files, so a long-lived index accumulates thousands of them — at
-    * cluster scale that is task-per-tiny-file scheduling and NameNode
-    * pressure on every query. Publish ONE new version whose segment
-    * rewrites `sh` and `bands` into target-sized files (DISTINCT
-    * first — a no-op on a healthy index since the replay-safe append
-    * never duplicates, but it repairs an index half-doubled by a
-    * pre-guard crash) and whose manifest references ONLY the new
-    * segment — the old segments age out with the GC horizon while any
-    * in-flight reader keeps its resolved snapshot. Query results over
-    * a compacted index are bit-equal to the uncompacted one
-    * (spec-asserted) — the band join and shingle verify are
-    * layout-independent. */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, targetBytes: Long = 64L << 20): Unit = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val snap = graft.engine.Manifests.resolveOrFail(spark, dir,
-      "MinHash index", "compaction needs a finished build")
-    graft.engine.Manifests.publish(spark, dir, tag = "compact") { (v, seg, _) =>
-      Seq("params", "sh", "bands").foreach(
-        compactSnapshotTable(spark, snap, _, seg, targetBytes))
-      Seq("params", "sh", "bands")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
-    }
-    ()
-  }
-
-  /** [[compactMinhashIndex]] for the eval-gram decontamination index:
-    * here the DISTINCT does real work — [[appendToGramIndex]] tolerates
-    * cross-append duplicate grams by documented contract (the mark
-    * merge is idempotent), so compaction is where that tolerated
-    * redundancy is finally paid down. One new manifest version whose
-    * segment holds the re-distinct, size-targeted tables. */
-  def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, targetBytes: Long = 64L << 20): Unit = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val snap = graft.engine.Manifests.resolveOrFail(spark, dir,
-      "eval-gram index", "compaction needs a finished build")
-    graft.engine.Manifests.publish(spark, dir, tag = "compact") { (v, seg, _) =>
-      Seq("params", "grams").foreach(
-        compactSnapshotTable(spark, snap, _, seg, targetBytes))
-      Seq("params", "grams")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
-    }
-    ()
-  }
-
-  /** One snapshot table rewritten (DISTINCT, size-targeted file count)
-    * into a new segment — the shared tail of the MinHash/gram/pHash
-    * compactions; the caller's manifest commit makes the swap atomic. */
-  private[operators] def compactSnapshotTable(
-      spark: org.apache.spark.sql.SparkSession,
-      snap: graft.engine.Manifests.Snapshot, table: String, seg: String,
-      targetBytes: Long): Unit = {
-    val paths = snap.paths(table)
-    val fs = new org.apache.hadoop.fs.Path(paths.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = paths.map(p => fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(p)).getLength).sum
-    val nf = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    snap.read(spark, table).distinct().repartition(nf)
-      .write.mode("overwrite").parquet(s"$seg/$table")
   }
 
   /** [[minhashNearDupAcross]] against a PERSISTED reference index: only
@@ -1155,12 +1083,8 @@ object Dedup {
     * Versioned-manifest commits like every stored artifact. */
   def buildSimhashIndex(ref: DataFrame, dir: String, idCol: String,
       textCol: String): Unit = {
-    graft.engine.Manifests.publish(ref.sparkSession, dir, tag = "build") { (v, seg, _) =>
-      simhash(ref, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$seg/sigs")
-      Map("sigs" -> Seq(graft.engine.Manifests.ref(v, "sigs")))
-    }
-    ()
+    graft.engine.Manifests.build(ref.sparkSession, dir)(
+      _.write("sigs", simhash(ref, idCol, textCol)))
   }
 
   /** Index MAINTENANCE: one new O(|batch|) segment of signatures.
@@ -1176,12 +1100,7 @@ object Dedup {
     val novel = materialized(simhash(newRef, idCol, textCol)
       .join(snap.read(spark, "sigs").select("id"), Seq("id"), "left_anti"))
     if (!novel.isEmpty) {
-      graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-        novel.write.mode("overwrite").parquet(s"$seg/sigs")
-        Map("sigs" -> (snap.tables("sigs") :+
-          graft.engine.Manifests.ref(v, "sigs")))
-      }
-      ()
+      graft.engine.Manifests.append(spark, dir)(_.write("sigs", novel))
     }
   }
 
@@ -1476,16 +1395,12 @@ object Dedup {
     val spark = evalDocs.sparkSession
     import spark.implicits._
     require(k >= 1, s"need k >= 1; got k=$k")
-    graft.engine.Manifests.publish(spark, dir, tag = "build") { (v, seg, _) =>
-      Seq(k).toDF("k").write.mode("overwrite").parquet(s"$seg/params")
-      charGrams(parallelized(evalDocs)
+    graft.engine.Manifests.build(spark, dir) { seg =>
+      seg.write("params", Seq(k).toDF("k"))
+      seg.write("grams", charGrams(parallelized(evalDocs)
           .select(col(idCol).as("id"), col(textCol).as("text")), k)
-        .select("gram").distinct()
-        .write.mode("overwrite").parquet(s"$seg/grams")
-      Seq("params", "grams")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
+        .select("gram").distinct())
     }
-    ()
   }
 
   /** Index MAINTENANCE: gram a newly-added eval corpus with the FROZEN
@@ -1494,22 +1409,18 @@ object Dedup {
     * mark rows, and the gaps-and-islands merge is idempotent over
     * duplicate positions (min/max over equal values) — documented
     * rather than paid for with a global re-distinct on every append
-    * (compaction pays it down). */
+    * ([[graft.engine.Manifests.compact]] pays it down). */
   def appendToGramIndex(newEval: DataFrame, dir: String, idCol: String,
       textCol: String): Unit = {
     val spark = newEval.sparkSession
     val snap = graft.engine.Manifests.resolveOrFail(spark, dir,
       "eval-gram index", "append needs a finished build")
     val k = snap.read(spark, "params").head().getInt(0)
-    graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-      charGrams(parallelized(newEval)
+    graft.engine.Manifests.append(spark, dir) { seg =>
+      seg.write("grams", charGrams(parallelized(newEval)
           .select(col(idCol).as("id"), col(textCol).as("text")), k)
-        .select("gram").distinct()
-        .write.mode("overwrite").parquet(s"$seg/grams")
-      snap.tables ++ Seq("grams" ->
-        (snap.tables("grams") :+ graft.engine.Manifests.ref(v, "grams")))
+        .select("gram").distinct())
     }
-    ()
   }
 
   /** [[exciseContaminated]] against a PERSISTED eval-gram index: only
@@ -1953,13 +1864,8 @@ object Dedup {
     * df, exactly the MinHash index's id contract). */
   def buildLineIndex(ref: DataFrame, dir: String, idCol: String,
       textCol: String): Unit = {
-    val spark = ref.sparkSession
-    graft.engine.Manifests.publish(spark, dir, tag = "build") { (v, seg, _) =>
-      linePartial(ref, idCol, textCol, "base")
-        .write.mode("overwrite").parquet(s"$seg/line_df")
-      Map("line_df" -> Seq(graft.engine.Manifests.ref(v, "line_df")))
-    }
-    ()
+    graft.engine.Manifests.build(ref.sparkSession, dir)(
+      _.write("line_df", linePartial(ref, idCol, textCol, "base")))
   }
 
   /** Index MAINTENANCE: add a new reference batch under `batchTag` as
@@ -1978,13 +1884,8 @@ object Dedup {
     val seen = snap.read(spark, "line_df")
       .filter(col("batch_tag") === batchTag).limit(1).count() > 0
     if (!seen) {
-      graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-        linePartial(newRef, idCol, textCol, batchTag)
-          .write.mode("overwrite").parquet(s"$seg/line_df")
-        Map("line_df" -> (snap.tables("line_df") :+
-          graft.engine.Manifests.ref(v, "line_df")))
-      }
-      ()
+      graft.engine.Manifests.append(spark, dir)(
+        _.write("line_df", linePartial(newRef, idCol, textCol, batchTag)))
     }
   }
 

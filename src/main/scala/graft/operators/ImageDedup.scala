@@ -481,15 +481,13 @@ object ImageDedup {
     * be filtered out by the caller (they are not reference content).
     * Versioned-manifest commits ([[graft.engine.Manifests]]) like the
     * MinHash/gram/line/BM25 stores: atomic publish, reader snapshots,
-    * GC. [[phashNearDupAcrossFromIndex]] over this index is bit-equal
-    * to the recompute-everything inline twin (ImageDedupSpec). */
+    * GC, and [[graft.engine.Manifests.compact]] for the small segments
+    * appends leave. [[phashNearDupAcrossFromIndex]] over this index is
+    * bit-equal to the recompute-everything inline twin
+    * (ImageDedupSpec). */
   def buildPhashIndex(refHs: DataFrame, dir: String): Unit = {
-    graft.engine.Manifests.publish(refHs.sparkSession, dir, tag = "build") { (v, seg, _) =>
-      refHs.select(col("img_id"), col("phash"))
-        .write.mode("overwrite").parquet(s"$seg/hashes")
-      Map("hashes" -> Seq(graft.engine.Manifests.ref(v, "hashes")))
-    }
-    ()
+    graft.engine.Manifests.build(refHs.sparkSession, dir)(
+      _.write("hashes", refHs.select(col("img_id"), col("phash"))))
   }
 
   /** Index MAINTENANCE: append newly-deduped images' hashes so
@@ -499,33 +497,10 @@ object ImageDedup {
     * (unpublished) commit is invisible and overwritten by the retry. */
   def appendToPhashIndex(newHs: DataFrame, dir: String): Unit = {
     val spark = newHs.sparkSession
-    val snap = graft.engine.Manifests.resolveOrFail(spark, dir,
+    graft.engine.Manifests.resolveOrFail(spark, dir,
       "pHash index", "append needs a finished build")
-    graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-      newHs.select(col("img_id"), col("phash"))
-        .write.mode("overwrite").parquet(s"$seg/hashes")
-      Map("hashes" -> (snap.tables("hashes") :+
-        graft.engine.Manifests.ref(v, "hashes")))
-    }
-    ()
-  }
-
-  /** Index COMPACTION — [[Dedup.compactMinhashIndex]]'s contract for
-    * the media index: appends accumulate small segments; publish one
-    * version whose segment rewrites `hashes` into target-sized files
-    * (DISTINCT defends against a pre-crash double-append). Query
-    * results bit-equal (spec-asserted — the band join is
-    * layout-independent). */
-  def compactPhashIndex(spark: SparkSession, dir: String,
-      targetBytes: Long = 64L << 20): Unit = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val snap = graft.engine.Manifests.resolveOrFail(spark, dir,
-      "pHash index", "compaction needs a finished build")
-    graft.engine.Manifests.publish(spark, dir, tag = "compact") { (v, seg, _) =>
-      Dedup.compactSnapshotTable(spark, snap, "hashes", seg, targetBytes)
-      Map("hashes" -> Seq(graft.engine.Manifests.ref(v, "hashes")))
-    }
-    ()
+    graft.engine.Manifests.append(spark, dir)(
+      _.write("hashes", newHs.select(col("img_id"), col("phash"))))
   }
 
   /** [[phashNearDupAcross]] against a PERSISTED reference index: only

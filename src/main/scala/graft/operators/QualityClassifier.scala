@@ -167,18 +167,19 @@ object QualityClassifier {
     require(r.getLong(3) > 0 && r.getLong(4) > 0,
       s"training needs BOTH classes; got docs_pos=${r.getLong(3)} " +
         s"docs_neg=${r.getLong(4)}")
-    graft.engine.Manifests.publish(spark, dir, tag = "build") { (v, seg, _) =>
-      p.write.mode("overwrite").parquet(s"$seg/params")
-      val c = Caches.materialized(counts)
-      c.write.mode("overwrite").parquet(s"$seg/counts")
-      c.crossJoin(broadcast(p)).select(col("tok"),
-        weightExpr(col("c_pos"), col("c_neg"), col("n_pos"), col("n_neg"),
-          col("v")).as("w"))
-        .write.mode("overwrite").parquet(s"$seg/weights")
-      Seq("params", "counts", "weights")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
-    }
-    ()
+    graft.engine.Manifests.build(spark, dir)(
+      writeModel(_, p, Caches.materialized(counts)))
+  }
+
+  /** The three model tables of one commit: `params`, `counts` and the
+    * `weights` derived from them. */
+  private def writeModel(seg: graft.engine.Manifests.Segment,
+      p: DataFrame, c: DataFrame): Unit = {
+    seg.write("params", p)
+    seg.write("counts", c)
+    seg.write("weights", c.crossJoin(broadcast(p)).select(col("tok"),
+      weightExpr(col("c_pos"), col("c_neg"), col("n_pos"), col("n_neg"),
+        col("v")).as("w")))
   }
 
   /** Model MAINTENANCE — the property Naive Bayes buys that no
@@ -225,17 +226,8 @@ object QualityClassifier {
         coalesce(sum("c_neg"), lit(0L)).as("n_neg"))
       .withColumn("docs_pos", lit(oldP.getLong(3) + newDocs.getLong(0)))
       .withColumn("docs_neg", lit(oldP.getLong(4) + newDocs.getLong(1))))
-    graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-      p.write.mode("overwrite").parquet(s"$seg/params")
-      merged.write.mode("overwrite").parquet(s"$seg/counts")
-      merged.crossJoin(broadcast(p)).select(col("tok"),
-        weightExpr(col("c_pos"), col("c_neg"), col("n_pos"), col("n_neg"),
-          col("v")).as("w"))
-        .write.mode("overwrite").parquet(s"$seg/weights")
-      Seq("params", "counts", "weights")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
-    }
-    ()
+    graft.engine.Manifests.build(spark, dir, tag = "append")(
+      writeModel(_, p, merged))
   }
 
   /** Score `docs` with the STORED model — the per-arrival leg: cost is

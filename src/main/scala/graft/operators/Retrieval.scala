@@ -236,7 +236,7 @@ object Retrieval {
 
   // ------------------------------------------- persisted BM25 postings
 
-  /** One segment's four partial tables for `docs`, written under
+  /** One segment's four partial tables for `docs`, written into
     * `seg`: `postings` (w, doc_id, tf — sorted by term within files,
     * so parquet row-group min/max stats prune non-query terms at scan
     * time), `dl` (doc_id, dl), `dfreq` (w, partial_df), and `stats`
@@ -253,7 +253,7 @@ object Retrieval {
     pmod(xxhash64(w), lit(buckets.toLong))
 
   private def writeBm25Segment(docs: DataFrame, idCol: String,
-      textCol: String, seg: String,
+      textCol: String, seg: graft.engine.Manifests.Segment,
       postingsBuckets: Option[Int] = None): Unit = {
     val tf = graft.engine.Caches.materialized(
       termFreq(docs, idCol, textCol)
@@ -268,7 +268,7 @@ object Retrieval {
       case None =>
         tf.repartitionByRange(col("w"), col("doc_id"))
           .sortWithinPartitions("w", "doc_id")
-          .write.mode("overwrite").parquet(s"$seg/postings")
+          .write.mode("overwrite").parquet(seg.path("postings"))
       case Some(nb) =>
         // PARTITIONED layout: postings land under `wb=<bucket>/`
         // directories, so a query's file listing prunes to the
@@ -281,18 +281,14 @@ object Retrieval {
           .repartitionByRange(col("wb"), col("w"), col("doc_id"))
           .sortWithinPartitions("wb", "w", "doc_id")
           .write.partitionBy("wb").mode("overwrite")
-          .parquet(s"$seg/postings")
+          .parquet(seg.path("postings"))
     }
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    dl.write.mode("overwrite").parquet(s"$seg/dl")
-    tf.groupBy("w").agg(count(lit(1)).as("partial_df"))
-      .write.mode("overwrite").parquet(s"$seg/dfreq")
-    docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(dl.agg(coalesce(sum("dl"), lit(0L)).as("dl_sum")))
-      .write.mode("overwrite").parquet(s"$seg/stats")
+    seg.write("dl", dl)
+    seg.write("dfreq", tf.groupBy("w").agg(count(lit(1)).as("partial_df")))
+    seg.write("stats", docs.agg(count(lit(1)).as("n_docs"))
+      .crossJoin(dl.agg(coalesce(sum("dl"), lit(0L)).as("dl_sum"))))
   }
-
-  private val Bm25Tables = Seq("postings", "dl", "dfreq", "stats")
 
   /** Build-once persistence of the BM25 corpus statistics — the last
     * retrieval structure without a build/append/query lifecycle (the
@@ -316,12 +312,9 @@ object Retrieval {
     val spark = docs.sparkSession
     require(postingsBuckets.forall(_ >= 1),
       s"postingsBuckets must be >= 1, got $postingsBuckets")
-    graft.engine.Manifests.publish(spark, dir, tag = "build",
-      meta = layoutMeta(postingsBuckets)) { (v, seg, _) =>
-      writeBm25Segment(docs, idCol, textCol, seg, postingsBuckets)
-      Bm25Tables.map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
-    }
-    ()
+    graft.engine.Manifests.build(spark, dir,
+      meta = layoutMeta(postingsBuckets))(
+      writeBm25Segment(docs, idCol, textCol, _, postingsBuckets))
   }
 
   private def layoutMeta(postingsBuckets: Option[Int]): Map[String, String] =
@@ -405,23 +398,18 @@ object Retrieval {
       // (and re-emits it), so a store is partitioned or flat as a
       // WHOLE — mixed-layout segments would break the union read.
       val layout = postingsLayout(snap)
-      graft.engine.Manifests.publish(spark, dir, tag = "append",
-        meta = layoutMeta(layout)) { (v, seg, _) =>
-        writeBm25Segment(novel, idCol, textCol, seg, layout)
-        Bm25Tables.map(t => t ->
-          (snap.tables(t) :+ graft.engine.Manifests.ref(v, t))).toMap
-      }
-      ()
+      graft.engine.Manifests.append(spark, dir, meta = layoutMeta(layout))(
+        writeBm25Segment(novel, idCol, textCol, _, layout))
     }
   }
 
-  /** Index COMPACTION — the [[Dedup.compactMinhashIndex]] contract for
-    * the postings store: appends accumulate small segments; publish one
-    * version whose segment rewrites each table into target-sized files.
-    * The DISTINCT inside the shared helper is a no-op for `postings`/
-    * `dl` (the replay-safe append never duplicates a doc) and WRONG for
-    * the partial tables, which may legitimately carry one row per
-    * (term, segment) — so `dfreq` and `stats` are re-AGGREGATED to
+  /** Index COMPACTION — the [[graft.engine.Manifests.compact]] contract
+    * for the postings store: appends accumulate small segments; publish
+    * one version whose segment rewrites each table into target-sized
+    * files. The DISTINCT of the generic compaction is a no-op for
+    * `postings`/`dl` (the replay-safe append never duplicates a doc) and
+    * WRONG for the partial tables, which may legitimately carry one row
+    * per (term, segment) — so `dfreq` and `stats` are re-AGGREGATED to
     * their canonical one-row-per-key form instead (query results are
     * unchanged: the query path sums partials, and a sum of sums is the
     * sum). Postings re-sort by term so row-group pruning survives
@@ -432,25 +420,21 @@ object Retrieval {
     val snap = graft.engine.Manifests.resolveOrFail(spark, dir,
       "BM25 index", "compaction needs a finished build")
     val layout = postingsLayout(snap)
-    graft.engine.Manifests.publish(spark, dir, tag = "compact",
-      meta = layoutMeta(layout)) { (v, seg, _) =>
+    def files(t: String) =
+      graft.engine.Manifests.targetFiles(spark, snap, t, targetBytes)
+    graft.engine.Manifests.build(spark, dir, tag = "compact",
+      meta = layoutMeta(layout)) { seg =>
       // Range-partition into ceil(bytes/targetBytes) files (the
-      // compactSnapshotTable sizing) — the default shuffle-partition
+      // generic compaction's sizing) — the default shuffle-partition
       // count would leave a small index MORE fragmented after
       // compaction than before it (review finding).
-      val postingPaths = snap.paths("postings")
-      val fs = new org.apache.hadoop.fs.Path(postingPaths.head)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val postingBytes = postingPaths.map(p => fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(p)).getLength).sum
-      val nf = math.max(1L,
-        (postingBytes + targetBytes - 1) / targetBytes).toInt
+      val nf = files("postings")
       layout match {
         case None =>
           snap.read(spark, "postings")
             .repartitionByRange(nf, col("w"), col("doc_id"))
             .sortWithinPartitions("w", "doc_id")
-            .write.mode("overwrite").parquet(s"$seg/postings")
+            .write.mode("overwrite").parquet(seg.path("postings"))
         case Some(_) =>
           // The partitioned layout keeps its directory scheme across
           // compaction (wb is a real column of the partitioned read,
@@ -459,20 +443,16 @@ object Retrieval {
             .repartitionByRange(nf, col("wb"), col("w"), col("doc_id"))
             .sortWithinPartitions("wb", "w", "doc_id")
             .write.partitionBy("wb").mode("overwrite")
-            .parquet(s"$seg/postings")
+            .parquet(seg.path("postings"))
       }
-      graft.operators.Dedup.compactSnapshotTable(spark, snap, "dl", seg,
-        targetBytes)
-      snap.read(spark, "dfreq").groupBy("w")
-        .agg(sum("partial_df").as("partial_df"))
-        .write.mode("overwrite").parquet(s"$seg/dfreq")
-      snap.read(spark, "stats")
+      seg.write("dl",
+        snap.read(spark, "dl").distinct().repartition(files("dl")))
+      seg.write("dfreq", snap.read(spark, "dfreq").groupBy("w")
+        .agg(sum("partial_df").as("partial_df")))
+      seg.write("stats", snap.read(spark, "stats")
         .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-          coalesce(sum("dl_sum"), lit(0L)).as("dl_sum"))
-        .write.mode("overwrite").parquet(s"$seg/stats")
-      Bm25Tables.map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
+          coalesce(sum("dl_sum"), lit(0L)).as("dl_sum")))
     }
-    ()
   }
 
   /** BM25 top-k of external query documents against the STORED index:

@@ -1052,19 +1052,17 @@ object Similarity {
     * (written first, READ BACK, and used to encode) + `codes` — the
     * stored index is self-consistent by construction. Shared by the
     * PQ and IVF-PQ builds. */
-  private def writePqSegment(corpus: DataFrame, seg: String, m: Int,
-      subDim: Int, initStride: Long, iters: Int,
-      maxCodebook: Long): Unit = {
-    val spark = corpus.sparkSession
+  private def writePqSegment(corpus: DataFrame,
+      seg: graft.engine.Manifests.Segment, m: Int, subDim: Int,
+      initStride: Long, iters: Int, maxCodebook: Long): Unit = {
     val corpusSubs = graft.engine.Caches.materialized(
       subVectors(corpus, "vec_id", m, subDim))
-    Clustering.kmeansCentroidsGrouped(
-        corpusSubs, "sub_j", "vec_id", "sub_emb",
-        initStride, iters, subDim, maxCodebook)
-      .write.mode("overwrite").parquet(s"$seg/codebook")
-    val storedCodebook = spark.read.parquet(s"$seg/codebook")
-    encodePqCodes(corpusSubs, storedCodebook, subDim)
-      .write.mode("overwrite").parquet(s"$seg/codes")
+    seg.write("codebook", Clustering.kmeansCentroidsGrouped(
+      corpusSubs, "sub_j", "vec_id", "sub_emb",
+      initStride, iters, subDim, maxCodebook))
+    val storedCodebook =
+      corpus.sparkSession.read.parquet(seg.path("codebook"))
+    seg.write("codes", encodePqCodes(corpusSubs, storedCodebook, subDim))
   }
 
   /** Build-once PQ index persistence — the production 100 TB shape:
@@ -1089,12 +1087,8 @@ object Similarity {
   def buildPqIndex(corpus: DataFrame, dir: String, m: Int, subDim: Int,
       initStride: Long, iters: Int, maxCodebook: Long = 128): Unit = {
     requireFullCoverage(m, subDim)
-    graft.engine.Manifests.publish(corpus.sparkSession, dir, tag = "build") { (v, seg, _) =>
-      writePqSegment(corpus, seg, m, subDim, initStride, iters, maxCodebook)
-      Seq("codebook", "codes")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
-    }
-    ()
+    graft.engine.Manifests.build(corpus.sparkSession, dir)(
+      writePqSegment(corpus, _, m, subDim, initStride, iters, maxCodebook))
   }
 
   /** [[buildPqIndex]] plus the IVF layer: the coarse cell centroids and
@@ -1111,21 +1105,16 @@ object Similarity {
       maxCodebook: Long = 128): Unit = {
     requireFullCoverage(m, subDim)
     val spark = corpus.sparkSession
-    graft.engine.Manifests.publish(spark, dir, tag = "build") { (v, seg, _) =>
-      Clustering.kmeansCentroids(corpus, "vec_id", "embedding",
-          cellStride, cellIters)
-        .write.mode("overwrite").parquet(s"$seg/cents")
-      val storedCents = spark.read.parquet(s"$seg/cents")
-      assignCells(storedCents)(
+    graft.engine.Manifests.build(spark, dir) { seg =>
+      seg.write("cents", Clustering.kmeansCentroids(corpus, "vec_id",
+        "embedding", cellStride, cellIters))
+      val storedCents = spark.read.parquet(seg.path("cents"))
+      seg.write("cells", assignCells(storedCents)(
           corpus.select(col("vec_id").as("nid"), col("embedding").as("c_emb")),
           "nid", "c_emb", 1)
-        .select("nid", "cent_id")
-        .write.mode("overwrite").parquet(s"$seg/cells")
+        .select("nid", "cent_id"))
       writePqSegment(corpus, seg, m, subDim, pqStride, pqIters, maxCodebook)
-      Seq("cents", "cells", "codebook", "codes")
-        .map(t => t -> Seq(graft.engine.Manifests.ref(v, t))).toMap
     }
-    ()
   }
 
   /** Index MAINTENANCE: encode `newVectors` against the FROZEN stored
@@ -1156,14 +1145,9 @@ object Similarity {
         "appended vectors get codes but no cell and stay unsearchable")
     val codebook = snap.read(spark, "codebook")
     val (m, subDim) = pqShapeOf(codebook)
-    graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
+    graft.engine.Manifests.append(spark, dir)(_.write("codes",
       encodePqCodes(subVectors(newVectors, "vec_id", m, subDim),
-          codebook, subDim)
-        .write.mode("overwrite").parquet(s"$seg/codes")
-      snap.tables ++ Seq("codes" ->
-        (snap.tables("codes") :+ graft.engine.Manifests.ref(v, "codes")))
-    }
-    ()
+        codebook, subDim)))
   }
 
   /** [[appendToPqIndex]] for an IVF-PQ index: new vectors additionally
@@ -1180,23 +1164,15 @@ object Similarity {
     val cents = snap.read(spark, "cents")
     val codebook = snap.read(spark, "codebook")
     val (m, subDim) = pqShapeOf(codebook)
-    graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, _) =>
-      assignCells(cents)(
+    graft.engine.Manifests.append(spark, dir) { seg =>
+      seg.write("cells", assignCells(cents)(
           newVectors.select(col("vec_id").as("nid"),
             col("embedding").as("c_emb")),
           "nid", "c_emb", 1)
-        .select("nid", "cent_id")
-        .write.mode("overwrite").parquet(s"$seg/cells")
-      encodePqCodes(subVectors(newVectors, "vec_id", m, subDim),
-          codebook, subDim)
-        .write.mode("overwrite").parquet(s"$seg/codes")
-      snap.tables ++ Seq(
-        "cells" -> (snap.tables("cells") :+
-          graft.engine.Manifests.ref(v, "cells")),
-        "codes" -> (snap.tables("codes") :+
-          graft.engine.Manifests.ref(v, "codes")))
+        .select("nid", "cent_id"))
+      seg.write("codes", encodePqCodes(
+        subVectors(newVectors, "vec_id", m, subDim), codebook, subDim))
     }
-    ()
   }
 
   /** [[appendToIvfPqIndex]] made REPLAY-SAFE for at-least-once callers

@@ -2,31 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The injected optimizer rule must turn naive timestamp range joins
   * into binned equi-joins — same rows, no nested loop — and must leave
-  * every other join shape alone. Uses its own extended session (same
-  * JVM SparkContext) because extensions bind at session construction. */
-class BinnedIntervalJoinRuleSpec extends AnyFunSuite {
-
-  private def withExtendedSession[A](body: SparkSession => A): A = {
-    val prev = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-interval-rule-test")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try body(s)
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
-  }
+  * every other join shape alone. */
+class BinnedIntervalJoinRuleSpec extends SparkSpec {
 
   private def points(s: SparkSession): DataFrame = {
     import s.implicits._
@@ -52,10 +32,16 @@ class BinnedIntervalJoinRuleSpec extends AnyFunSuite {
       col("ts") >= col("w_start") && col("ts") < col("w_end"))
       .select("pid", "iid")
 
+  private val BinSeconds = "spark.graft.intervalJoin.binSeconds"
+  private val MaxBins = "spark.graft.intervalJoin.maxBinsPerInterval"
+
+  /** `body` with the rule disabled: the nested-loop baseline. */
+  private def naive[A](body: => A): A =
+    withConf("spark.graft.intervalJoin.enabled" -> "false")(body)
+
   test("naive range join plans as a binned equi-join under the rule") {
-    withExtendedSession { s =>
-      s.conf.set("spark.graft.intervalJoin.binSeconds", "13")
-      val df = rangeJoin(s)
+    withConf(BinSeconds -> "13") {
+      val df = rangeJoin(spark)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
@@ -67,98 +53,75 @@ class BinnedIntervalJoinRuleSpec extends AnyFunSuite {
   }
 
   test("rule rewrite returns exactly the nested-loop join's rows") {
-    val expected = rangeJoin(TestSpark.spark).collect()
+    def pairs() = rangeJoin(spark).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
-    withExtendedSession { s =>
-      s.conf.set("spark.graft.intervalJoin.binSeconds", "13")
-      val got = rangeJoin(s).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted
-      assert(got.sameElements(expected))
-      assert(expected.nonEmpty, "fixture must produce matches")
-    }
+    val expected = naive(pairs())
+    val got = withConf(BinSeconds -> "13")(pairs())
+    assert(got.sameElements(expected))
+    assert(expected.nonEmpty, "fixture must produce matches")
   }
 
   test("enabled=false leaves the naive plan alone") {
-    withExtendedSession { s =>
-      s.conf.set("spark.graft.intervalJoin.enabled", "false")
-      try {
-        val df = rangeJoin(s)
-        assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_pbin"),
-          "rewrite fired while disabled")
-      } finally s.conf.unset("spark.graft.intervalJoin.enabled")
+    naive {
+      val df = rangeJoin(spark)
+      assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_pbin"),
+        "rewrite fired while disabled")
     }
   }
 
   test("an interval exploding past maxBinsPerInterval raises, loudly and actionably") {
-    withExtendedSession { s =>
-      // 13 s bins against up-to-40 s spans → up to ~4 bins per interval;
-      // a cap of 1 makes any multi-bin interval trip the guard.
-      s.conf.set("spark.graft.intervalJoin.binSeconds", "13")
-      s.conf.set("spark.graft.intervalJoin.maxBinsPerInterval", "1")
-      try {
-        val e = intercept[Exception] { rangeJoin(s).collect() }
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(x =>
-            Option(x.getMessage).toSeq ++ messages(x.getCause))
-        val msg = messages(e).mkString("\n")
-        assert(msg.contains("binSeconds") && msg.contains("maxBinsPerInterval"),
-          s"error not actionable:\n$msg")
-      } finally {
-        s.conf.unset("spark.graft.intervalJoin.binSeconds")
-        s.conf.unset("spark.graft.intervalJoin.maxBinsPerInterval")
-      }
+    // 13 s bins against up-to-40 s spans → up to ~4 bins per interval;
+    // a cap of 1 makes any multi-bin interval trip the guard.
+    withConf(BinSeconds -> "13", MaxBins -> "1") {
+      val e = intercept[Exception] { rangeJoin(spark).collect() }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x =>
+          Option(x.getMessage).toSeq ++ messages(x.getCause))
+      val msg = messages(e).mkString("\n")
+      assert(msg.contains("binSeconds") && msg.contains("maxBinsPerInterval"),
+        s"error not actionable:\n$msg")
     }
   }
 
   test("intervals within the cap pass the guard unchanged") {
-    val expected = rangeJoin(TestSpark.spark).count()
-    withExtendedSession { s =>
-      s.conf.set("spark.graft.intervalJoin.binSeconds", "13")
-      s.conf.set("spark.graft.intervalJoin.maxBinsPerInterval", "4096")
-      try assert(rangeJoin(s).count() == expected)
-      finally {
-        s.conf.unset("spark.graft.intervalJoin.binSeconds")
-        s.conf.unset("spark.graft.intervalJoin.maxBinsPerInterval")
-      }
+    val expected = naive(rangeJoin(spark).count())
+    withConf(BinSeconds -> "13", MaxBins -> "4096") {
+      assert(rangeJoin(spark).count() == expected)
     }
   }
 
   test("a BinSecondsTag on the Join survives into a fresh QueryExecution") {
-    withExtendedSession { s =>
-      // No conf set → default 3600 s. The tag must win, and must still
-      // win for an action that builds a NEW QueryExecution on top of the
-      // tagged Dataset (what Bench's count() and Verify's write do) —
-      // the failure mode of a query-scoped conf window, whose width only
-      // reaches optimizer runs inside the window.
-      val df = rangeJoin(s)
-      df.queryExecution.analyzed.foreach {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join
-            if j.condition.isDefined =>
-          j.setTagValue(graft.plans.BinnedIntervalJoinRule.BinSecondsTag, 17L)
-        case _ =>
-      }
-      val fresh = df.groupBy().count()
-      val optimized = fresh.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("17000000"),
-        s"tagged 17 s width missing from re-optimized plan:\n$optimized")
-      assert(!optimized.contains("3600000000"),
-        "default width used despite tag")
-      assert(fresh.collect().head.getLong(0) ==
-        rangeJoin(TestSpark.spark).count(), "tagged plan changed results")
+    // No conf set → default 3600 s. The tag must win, and must still
+    // win for an action that builds a NEW QueryExecution on top of the
+    // tagged Dataset (what Bench's count() and Verify's write do) —
+    // the failure mode of a query-scoped conf window, whose width only
+    // reaches optimizer runs inside the window.
+    val df = rangeJoin(spark)
+    df.queryExecution.analyzed.foreach {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.condition.isDefined =>
+        j.setTagValue(graft.plans.BinnedIntervalJoinRule.BinSecondsTag, 17L)
+      case _ =>
     }
+    val fresh = df.groupBy().count()
+    val optimized = fresh.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("17000000"),
+      s"tagged 17 s width missing from re-optimized plan:\n$optimized")
+    assert(!optimized.contains("3600000000"),
+      "default width used despite tag")
+    assert(fresh.collect().head.getLong(0) ==
+      naive(rangeJoin(spark).count()), "tagged plan changed results")
   }
 
   test("equi-joins and non-range joins are left untouched") {
-    withExtendedSession { s =>
-      import s.implicits._
-      val a = Seq((1L, 10L)).toDF("k", "va")
-      val b = Seq((1L, 20L)).toDF("k2", "vb")
-      val equi = a.join(b, col("k") === col("k2"))
-      assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_"),
-        "rule must skip equi-joins")
-      val nonTs = a.join(b, col("va") >= col("k2") && col("va") < col("vb"))
-      assert(!nonTs.queryExecution.optimizedPlan.toString.contains("_graft_"),
-        "rule must skip non-timestamp ranges")
-    }
+    import spark.implicits._
+    val a = Seq((1L, 10L)).toDF("k", "va")
+    val b = Seq((1L, 20L)).toDF("k2", "vb")
+    val equi = a.join(b, col("k") === col("k2"))
+    assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_"),
+      "rule must skip equi-joins")
+    val nonTs = a.join(b, col("va") >= col("k2") && col("va") < col("vb"))
+    assert(!nonTs.queryExecution.optimizedPlan.toString.contains("_graft_"),
+      "rule must skip non-timestamp ranges")
   }
 }

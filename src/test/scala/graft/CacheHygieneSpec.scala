@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Cache lifecycle gate: after ANY SparkEntry query's action plus one
   * `Caches.release()`, the SparkContext must carry zero persisted RDDs
   * beyond what existed before the query — i.e. every operator-internal
@@ -11,47 +8,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * caches in the block manager (eviction churn + disk pressure at
   * cluster scale).
   *
-  * Runs the FULL query surface at sf0.001 on an extended session (the
-  * custom-plan queries need the injected strategy/rule). Persistent-RDD
-  * ids are compared against a pre-query snapshot because the context is
-  * shared with other suites in the same JVM.
+  * Runs the FULL query surface at sf0.001 on the shared session, which
+  * carries the production extensions (the custom-plan queries need the
+  * injected strategy/rule). Persistent-RDD ids are compared against a
+  * pre-query snapshot because the context is shared with other suites
+  * in the same JVM.
   */
-class CacheHygieneSpec extends AnyFunSuite {
-
-  private def withExtendedSession[A](body: SparkSession => A): A = {
-    val prev = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cache-hygiene-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    try body(s)
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
-  }
+class CacheHygieneSpec extends SparkSpec {
 
   test("every query + release leaves no new persisted RDDs behind") {
-    withExtendedSession { s =>
-      val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          val before = s.sparkContext.getPersistentRDDs.keySet
-          try fn(s, TestSpark.sf).count()
-          catch { case e: Throwable =>
-            fail(s"$name failed to run at sf0.001: $e")
-          }
-          graft.engine.Caches.release()
-          val after = s.sparkContext.getPersistentRDDs.keySet -- before
-          if (after.nonEmpty) Some(s"$name leaked RDDs $after") else None
-      }
-      assert(leaks.isEmpty, leaks.mkString("\n"))
+    val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        try fn(spark, sf).count()
+        catch { case e: Throwable =>
+          fail(s"$name failed to run at sf0.001: $e")
+        }
+        graft.engine.Caches.release()
+        val after = spark.sparkContext.getPersistentRDDs.keySet -- before
+        if (after.nonEmpty) Some(s"$name leaked RDDs $after") else None
     }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
   }
 }

@@ -1,74 +1,45 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextKernels
 
 /** The SQL function surface registered by [[GraftExtensions]] must hand
-  * back exactly the native kernels the DataFrame API uses. Built on a
-  * second SparkSession (same JVM-wide SparkContext) because extensions
-  * bind at session construction; the shared test session is restored
-  * afterwards. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  private def withExtendedSession[A](body: SparkSession => A): A = {
-    val prev = TestSpark.spark // force creation before we detach it
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-test")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try body(s)
-    finally {
-      // Never stop `s`: it shares the JVM's SparkContext with the main
-      // test session. Just restore the session bindings.
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
-  }
+  * back exactly the native kernels the DataFrame API uses. */
+class ExtensionsSpec extends SparkSpec {
 
   test("SQL functions evaluate to the same values as the native kernels") {
-    withExtendedSession { s =>
-      val row = s.sql(
-        """SELECT
-          |  simhash64('the quick brown fox') AS sh,
-          |  word_shingles('a b c d', 2) AS grams,
-          |  poly_fingerprint('naïve café') AS fp,
-          |  marker_hits('the cat and the hat', array('the', 'and')) AS mh,
-          |  sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS ic,
-          |  vector_dot(array(float(1), float(2)), array(float(3), float(4))) AS dot,
-          |  vector_max_abs(array(float(-3), float(2))) AS ma,
-          |  vector_quantize(array(float(-3), float(1.5)), double(3)) AS qv
-          |""".stripMargin).head()
-      assert(row.getAs[Long]("sh") ==
-        TextKernels.simhash64(UTF8String.fromString("the quick brown fox")))
-      assert(row.getSeq[String](row.fieldIndex("grams")).toList ==
-        List("a b", "b c", "c d"))
-      assert(row.getAs[Long]("fp") ==
-        TextKernels.polyFingerprint(UTF8String.fromString("naïve café")))
-      assert(row.getAs[Int]("mh") == 3)
-      assert(row.getAs[Int]("ic") == 2)
-      assert(row.getAs[Double]("dot") == 11.0)
-      assert(row.getAs[Double]("ma") == 3.0)
-      assert(row.getSeq[Byte](row.fieldIndex("qv")).toList ==
-        List[Byte](-127, 64)) // floor(1.5/3*127+0.5) = 64
+    val row = spark.sql(
+      """SELECT
+        |  simhash64('the quick brown fox') AS sh,
+        |  word_shingles('a b c d', 2) AS grams,
+        |  poly_fingerprint('naïve café') AS fp,
+        |  marker_hits('the cat and the hat', array('the', 'and')) AS mh,
+        |  sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS ic,
+        |  vector_dot(array(float(1), float(2)), array(float(3), float(4))) AS dot,
+        |  vector_max_abs(array(float(-3), float(2))) AS ma,
+        |  vector_quantize(array(float(-3), float(1.5)), double(3)) AS qv
+        |""".stripMargin).head()
+    assert(row.getAs[Long]("sh") ==
+      TextKernels.simhash64(UTF8String.fromString("the quick brown fox")))
+    assert(row.getSeq[String](row.fieldIndex("grams")).toList ==
+      List("a b", "b c", "c d"))
+    assert(row.getAs[Long]("fp") ==
+      TextKernels.polyFingerprint(UTF8String.fromString("naïve café")))
+    assert(row.getAs[Int]("mh") == 3)
+    assert(row.getAs[Int]("ic") == 2)
+    assert(row.getAs[Double]("dot") == 11.0)
+    assert(row.getAs[Double]("ma") == 3.0)
+    assert(row.getSeq[Byte](row.fieldIndex("qv")).toList ==
+      List[Byte](-127, 64)) // floor(1.5/3*127+0.5) = 64
 
-    }
   }
 
   test("non-foldable scalar parameters are rejected at plan time") {
-    withExtendedSession { s =>
-      val e = intercept[Exception] {
-        s.sql("SELECT word_shingles('a b c', length(rand()::string))").head()
-      }
-      assert(e.getMessage.contains("foldable"),
-        s"expected a foldable-literal error, got: ${e.getMessage}")
+    val e = intercept[Exception] {
+      spark.sql("SELECT word_shingles('a b c', length(rand()::string))").head()
     }
+    assert(e.getMessage.contains("foldable"),
+      s"expected a foldable-literal error, got: ${e.getMessage}")
   }
 }

@@ -76,15 +76,9 @@ class FixturesSpec extends SparkSpec {
         // A manifest-protocol artifact: the build PUBLISHES versions as
         // it goes, so a retry on a non-wiped dir would stack v3/v4 on
         // top and GC the v1 a time-travel pin targets.
-        graft.engine.Manifests.publish(spark, dir, tag = "build") { (v, seg, _) =>
-          frame(2.0f).write.mode("overwrite").parquet(s"$seg/t")
-          Map("t" -> Seq(graft.engine.Manifests.ref(v, "t")))
-        }
+        graft.engine.Manifests.build(spark, dir)(_.write("t", frame(2.0f)))
         if (fail) throw new RuntimeException("interrupted mid-build")
-        graft.engine.Manifests.publish(spark, dir, tag = "append") { (v, seg, live) =>
-          frame(2.0f).write.mode("overwrite").parquet(s"$seg/t2")
-          live.get.tables + ("t2" -> Seq(graft.engine.Manifests.ref(v, "t2")))
-        }
+        graft.engine.Manifests.append(spark, dir)(_.write("t2", frame(2.0f)))
       }
     intercept[RuntimeException] { ensure(fail = true) }
     val dir = ensure(fail = false)

@@ -50,7 +50,7 @@ class IndexCompactionSpec extends SparkSpec {
         .paths(table).map(dataFiles).sum
     val filesBefore = tableFiles("sh") + tableFiles("bands")
     graft.engine.Caches.release()
-    Dedup.compactMinhashIndex(spark, dir)
+    graft.engine.Manifests.compact(spark, dir, "MinHash index")
     assert(graft.engine.Manifests.exists(spark, dir), "version re-published")
     assert(query() == before, "compacted index must answer bit-equally")
     val filesAfter = tableFiles("sh") + tableFiles("bands")
@@ -78,7 +78,7 @@ class IndexCompactionSpec extends SparkSpec {
     val before = run()
     val rowsBefore = gramRows()
     graft.engine.Caches.release()
-    Dedup.compactGramIndex(spark, dir)
+    graft.engine.Manifests.compact(spark, dir, "eval-gram index")
     assert(run() == before, "compacted gram index must excise bit-equally")
     val rowsAfter = gramRows()
     assert(rowsAfter * 3 == rowsBefore,
@@ -106,7 +106,7 @@ class IndexCompactionSpec extends SparkSpec {
     assert(before.map(_.getLong(1)) == Seq(1L))
     val filesBefore = hashFiles()
     graft.engine.Caches.release()
-    graft.operators.ImageDedup.compactPhashIndex(spark, dir)
+    graft.engine.Manifests.compact(spark, dir, "pHash index")
     assert(graft.engine.Manifests.exists(spark, dir))
     assert(query() == before, "compacted phash index must answer bit-equally")
     assert(hashFiles() < filesBefore)
@@ -117,10 +117,10 @@ class IndexCompactionSpec extends SparkSpec {
     val dir = s"${graft.engine.Sinks.scratch}/compaction_refusal"
     IncrementalIngest.deleteDir(spark, dir)
     assertThrows[IllegalArgumentException] {
-      Dedup.compactMinhashIndex(spark, dir)
+      graft.engine.Manifests.compact(spark, dir, "MinHash index")
     }
     assertThrows[IllegalArgumentException] {
-      Dedup.compactGramIndex(spark, dir)
+      graft.engine.Manifests.compact(spark, dir, "eval-gram index")
     }
   }
 }

@@ -64,7 +64,7 @@ class ManifestsSpec extends SparkSpec {
     assert(snap2.tables("sh").size == 2, "append adds a segment, not a rewrite")
 
     graft.engine.Caches.release()
-    Dedup.compactMinhashIndex(spark, dir)
+    Manifests.compact(spark, dir, "MinHash index")
     assert(Manifests.liveVersion(spark, dir).contains(3L))
     // snap2 (v2) is inside the keep horizon {v2, v3}: still readable.
     assert(snap2.read(spark, "sh").count() == 2L,
@@ -195,6 +195,43 @@ class ManifestsSpec extends SparkSpec {
   private def writeRows(dir: String, ids: Long*): Unit =
     df(ids.map(i => i -> s"row $i"): _*).write
       .mode("overwrite").parquet(dir)
+
+  test("build / append / compact spell the segment layout: own refs, carried refs, one distinct segment") {
+    val dir = s"${graft.engine.Sinks.scratch}/manifests_primitives"
+    val fresh = s"${graft.engine.Sinks.scratch}/manifests_primitives_fresh"
+    Seq(dir, fresh).foreach(IncrementalIngest.deleteDir(spark, _))
+    def live() = Manifests.snapshot(spark, dir).get
+    def rows(snap: Manifests.Snapshot, t: String, distinct: Boolean = false) = {
+      val d = snap.read(spark, t)
+      (if (distinct) d.distinct() else d).collect().map(_.toString).sorted.toSeq
+    }
+    Manifests.build(spark, dir) { seg =>
+      writeRows(seg.path("t"), 1L, 2L)
+      seg.write("u", df(9L -> "u"))
+    }
+    assert(live().tables == Map("t" -> Seq(Manifests.ref(1L, "t")),
+      "u" -> Seq(Manifests.ref(1L, "u"))), "build lists exactly its writes")
+    Manifests.append(spark, dir)(seg => writeRows(seg.path("t"), 2L, 3L))
+    assert(live().tables == Map(
+      "t" -> Seq(Manifests.ref(1L, "t"), Manifests.ref(2L, "t")),
+      "u" -> Seq(Manifests.ref(1L, "u"))),
+      "append carries the unwritten table and adds one ref per write")
+    assert(live().meta.get("tag").contains("append"))
+    // The run ledger's first commit: an append with nothing to carry.
+    Manifests.append(spark, fresh)(_.write("p", df(1L -> "p")))
+    assert(Manifests.snapshot(spark, fresh).get.tables ==
+      Map("p" -> Seq(Manifests.ref(1L, "p"))))
+    val before = live()
+    val want = Seq("t", "u").map(t => t -> rows(before, t, distinct = true))
+    assert(Manifests.compact(spark, dir, "test store") == 3L)
+    val after = live()
+    assert(after.meta.get("tag").contains("compact"))
+    assert(after.tables == Map("t" -> Seq(Manifests.ref(3L, "t")),
+      "u" -> Seq(Manifests.ref(3L, "u"))), "compaction lists one segment")
+    assert(Seq("t", "u").map(t => t -> rows(after, t)) == want,
+      "each table reads as the distinct of its rows before")
+    assert(rows(after, "t").size == 3, "the appended duplicate is gone")
+  }
 
   test("publish enforces the single-writer contract: one winner, one loud loser, no torn commit") {
     val dir = s"${graft.engine.Sinks.scratch}/manifests_claim_race"

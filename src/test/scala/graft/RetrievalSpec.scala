@@ -192,7 +192,7 @@ class RetrievalSpec extends SparkSpec {
     assert(dfreqC.count() == dfreqC.select("w").distinct().count(),
       "compaction must fold the df partials to one row per term")
     // The postings rewrite sizes its file count from targetBytes (the
-    // compactSnapshotTable arithmetic) — a tiny index must come out as
+    // Manifests.targetFiles arithmetic) — a tiny index must come out as
     // ONE postings file, not default-shuffle-partition-count fragments
     // (review finding: repartitionByRange without an explicit count).
     val postingsFiles = snapC.paths("postings").map { p =>

@@ -16,6 +16,8 @@ object TestSpark {
       .config("spark.sql.warehouse.dir",
         s"${graft.engine.Sinks.scratch}/test-warehouse")
       .config("spark.ui.enabled", "false")
+      // The production extensions, as every main's session has them.
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -26,4 +28,16 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** `body` with `confs` set on the shared session, each restored to
+    * its previous value (or unset) afterwards. */
+  def withConf[A](confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -37,6 +37,10 @@ def main(sf_dir: str, out_dir: str, only: set = None) -> int:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    try:
+        failures = json.load(open(f"{out_dir}/verify_failures.json"))
+    except FileNotFoundError:
+        failures = {}
     n_pass = n_fail = 0
     for name in sorted((only or set()) - oracle.keys()):
         print(f"FAIL {name}: no oracle SQL")
@@ -52,7 +56,8 @@ def main(sf_dir: str, out_dir: str, only: set = None) -> int:
             continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output")
+            why = f" ({failures[name]})" if name in failures else ""
+            print(f"FAIL {name}: no spark output{why}")
             n_fail += 1
             continue
         got = canon(con.sql(
